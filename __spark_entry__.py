@@ -11,13 +11,18 @@ integer sum → divide) so sums are order-independent and bit-identical.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
+from typing import Any, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giga_spatial_spark import cells, cells_hex, cells_s2, synth
+from giga_spatial_spark.functions import albers, laea, lcc, mollweide
 from giga_spatial_spark.functions import text as T
+from giga_spatial_spark.functions.crs import projection_from_params
+from giga_spatial_spark.functions.polar import EPSG_3413
 from giga_spatial_spark.geometry import polygon_centroid
 from giga_spatial_spark.operators import zonal
 from giga_spatial_spark.operators.ann import (
@@ -1837,26 +1842,91 @@ def q_normalize_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _cached_fixture(
+    params: str, build: Callable[[str], None], ext: str, sidecars: tuple[str, ...] = ()
+) -> str:
+    """Build a fixture file once and return its path.
+
+    The path is per-user and keyed by the sha256 of ``params`` (the
+    generating formula and grid), so a stale file from an older formula, or
+    a same-named file owned by another tenant of the shared /tmp, can never
+    change the output. ``build(staging)`` writes the file under a name unique
+    to this attempt (pid plus a random suffix), which is then renamed into
+    place: concurrent builders never write into one file, and a reader sees
+    either no file or a whole one. ``sidecars`` are the extensions of files
+    ``build`` writes next to the main one (a shapefile's .shx/.dbf); they are
+    renamed first and the existence-checked main file last."""
+    import getpass
+    import hashlib
+    import os
+    import uuid
+
+    d = f"/tmp/spark_graft_fixtures_{getpass.getuser()}"
+    key = hashlib.sha256(params.encode()).hexdigest()[:16]
+    path = f"{d}/{key}{ext}"
+    if os.path.exists(path):
+        return path
+    os.makedirs(d, exist_ok=True)
+    stage = f"{d}/.{key}.{os.getpid()}.{uuid.uuid4().hex[:8]}"
+    exts = (*sidecars, ext)
+    try:
+        build(stage + ext)
+        for e in exts:
+            os.replace(stage + e, f"{d}/{key}{e}")
+    finally:
+        for e in exts:
+            if os.path.exists(stage + e):
+                os.remove(stage + e)
+    return path
+
+
+def _formula_grid(w: int, h: int, val: tuple, nodata: tuple) -> "np.ndarray":
+    """Fixture pixels, row 0 first: ((px*a + row*b + c) % m) / 10 for
+    ``val = (a, b, c, m)``, and -9999 where (px*p + row*q) % r == 0 for
+    ``nodata = (p, q, r)``."""
+    import numpy as np
+
+    a, b, c, m = val
+    p, q, r = nodata
+    px = np.arange(w)[None, :]
+    row = np.arange(h)[:, None]
+    vals = ((px * a + row * b + c) % m) / 10.0
+    return np.where((px * p + row * q) % r == 0, -9999.0, vals)
+
+
+def _zone_pixels(pixels: DataFrame) -> DataFrame:
+    """Valid (non-nodata) pixels tagged with their admin zone."""
+    valid = pixels.where(F.col("value").isNotNull())
+    # pixel volume: Arrow grid-index refine (pip_join_rtree) — the
+    # 12-zone composite CASE of the native path falls out of codegen
+    # and runs interpreted (~38µs/row, docs/SCALE.md); measured 2.5×
+    # faster here with identical membership (same convex arithmetic)
+    return pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
+
+
+def _zonal_stats(pixels: DataFrame, median: bool = False) -> DataFrame:
+    """Per-zone pixel stats: integer-exact sum via decipixels, min/max and,
+    with ``median``, the exact interpolating median."""
+    aggs = [
+        F.count(F.lit(1)).alias("px_count"),
+        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
+        F.round(F.min("value"), 1).alias("v_min"),
+        F.round(F.max("value"), 1).alias("v_max"),
+    ]
+    if median:
+        aggs.append(
+            F.round(F.percentile(F.col("value"), F.lit(0.5)), 2).alias("v_median")
+        )
+    return _zone_pixels(pixels).groupBy("zone_id").agg(*aggs)
+
+
 def q_zonal_raster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zonal raster statistics (reference tif_processor.py:1008-1089):
     synthetic pixel table → nodata mask → PIP vs admin zones → per-zone
     stats (integer-exact sum via decipixels; exact interpolating median)."""
     from giga_spatial_spark.operators.raster import RasterMeta, synthetic_raster
 
-    pixels = synthetic_raster(spark, RasterMeta())
-    valid = pixels.where(F.col("value").isNotNull())
-    # pixel volume: Arrow grid-index refine (pip_join_rtree) — the
-    # 12-zone composite CASE of the native path falls out of codegen
-    # and runs interpreted (~38µs/row, docs/SCALE.md); measured 2.5×
-    # faster here with identical membership (same convex arithmetic)
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-        F.round(F.percentile(F.col("value"), F.lit(0.5)), 2).alias("v_median"),
-    )
+    return _zonal_stats(synthetic_raster(spark, RasterMeta()), median=True)
 
 
 def q_geotiff_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1866,405 +1936,42 @@ def q_geotiff_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     /tmp, decoded strip-parallel on executors, then fed through the same
     zonal flow as q_zonal_raster. The pixel table is bit-identical to the
     synthetic raster (pytest-asserted), so the oracle is the same SQL."""
-    import os
-
-    import numpy as np
-
     from giga_spatial_spark.operators.raster import RasterMeta
     from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
 
-    import getpass
-    import hashlib
-
     rmeta = RasterMeta()
-    # Cache keyed by the generating parameters AND scoped per-user so a
-    # stale file from an older formula, or a same-named file owned by
-    # another tenant of the shared /tmp, can never change the output
-    # (round-2 advisor finding). The key covers formula version + grid.
     params = (
         f"v2|w={rmeta.width}|h={rmeta.height}|lon0={rmeta.lon0!r}|"
         f"lat1={rmeta.lat1!r}|dx={rmeta.dx!r}|dy={rmeta.dy!r}|"
         "vals=(px*31+py*17+1)%997/10|nodata=(px*7+py*13)%23==0:-9999"
     )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    user = getpass.getuser()
-    path = f"/tmp/spark_graft_geotiff_{user}/synth_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(rmeta.width)[None, :]
-        py = np.arange(rmeta.height)[:, None]
-        vals = ((px * 31 + py * 17 + 1) % 997) / 10.0
-        vals = np.where((px * 7 + py * 13) % 23 == 0, -9999.0, vals)
+
+    def build(stage: str) -> None:
+        # the formula's row index py counts from the south edge
+        vals = _formula_grid(rmeta.width, rmeta.height, (31, 17, 1, 997), (7, 13, 23))
         write_tiff(
-            path + ".tmp", vals[::-1], lon0=rmeta.lon0, lat1=rmeta.lat1,
+            stage, vals[::-1], lon0=rmeta.lon0, lat1=rmeta.lat1,
             dx=rmeta.dx, dy=rmeta.dy, nodata=-9999.0,
         )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    # pixel volume: Arrow grid-index refine (pip_join_rtree) — the
-    # 12-zone composite CASE of the native path falls out of codegen
-    # and runs interpreted (~38µs/row, docs/SCALE.md); measured 2.5×
-    # faster here with identical membership (same convex arithmetic)
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-        F.round(F.percentile(F.col("value"), F.lit(0.5)), 2).alias("v_median"),
-    )
+
+    path = _cached_fixture(params, build, ".tif")
+    return _zonal_stats(tiff_pixel_table(spark, path), median=True)
 
 
-MOLL_W, MOLL_H, MOLL_DX = 180, 140, 15000.0
+class _ProjectedGeoTiff(NamedTuple):
+    """One row of the projected-CRS GeoTIFF family (see q_geotiff_projected)."""
 
-
-def _mollweide_anchor() -> tuple[float, float]:
-    """Top-left Mollweide (x0, y1) of the fixture grid: centered on zone 2's
-    centroid, computed with the from-scratch forward projection."""
-    import numpy as np
-
-    from giga_spatial_spark.functions import mollweide as M
-
-    cx, cy = polygon_centroid(ADMIN_POLYS[2])
-    x, y = M.forward(np.array([cx]), np.array([cy]))
-    return (
-        float(x[0]) - MOLL_W / 2 * MOLL_DX,
-        float(y[0]) + MOLL_H / 2 * MOLL_DX,
-    )
-
-
-def q_geotiff_mollweide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Projected-CRS raster ingest (reference GHSL Mollweide tiles,
-    handlers/ghsl.py:78-152): a deterministic GeoTIFF whose geotransform is
-    ESRI:54009 METERS (GeoKeyDirectory-tagged) is decoded strip-parallel,
-    pixel centers inverse-projected to lon/lat (functions/mollweide,
-    closed-form), then the same zonal flow as q_geotiff_zonal. The oracle
-    replays the grid, the Mollweide inverse (mollweide.inverse_sql) and the
-    zone predicates in SQL."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
-
-    x0, y1 = _mollweide_anchor()
-    params = (
-        f"moll_v1|w={MOLL_W}|h={MOLL_H}|x0={x0!r}|y1={y1!r}|dx={MOLL_DX!r}|"
-        "vals=(px*31+py*17+1)%997/10|nodata=(px*7+py*13)%23==0:-9999"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/moll_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(MOLL_W)[None, :]
-        row = np.arange(MOLL_H)[:, None]
-        vals = ((px * 31 + row * 17 + 1) % 997) / 10.0
-        vals = np.where((px * 7 + row * 13) % 23 == 0, -9999.0, vals)
-        write_tiff(
-            path + ".tmp", vals, lon0=x0, lat1=y1, dx=MOLL_DX, dy=MOLL_DX,
-            nodata=-9999.0, crs="ESRI:54009",
-        )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    # pixel volume: Arrow grid-index refine (pip_join_rtree) — the
-    # 12-zone composite CASE of the native path falls out of codegen
-    # and runs interpreted (~38µs/row, docs/SCALE.md); measured 2.5×
-    # faster here with identical membership (same convex arithmetic)
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-    )
-
-
-LAEA_W, LAEA_H, LAEA_DX = 160, 120, 18000.0
-
-
-def _laea_anchor() -> tuple[float, float]:
-    """Top-left EPSG:3035 (x0, y1) of the LAEA fixture grid: centered on
-    zone 3's centroid via the from-scratch ellipsoidal forward."""
-    import numpy as np
-
-    from giga_spatial_spark.functions import laea as L
-
-    cx, cy = polygon_centroid(ADMIN_POLYS[3])
-    x, y = L.forward(np.array([cx]), np.array([cy]))
-    return (
-        float(x[0]) - LAEA_W / 2 * LAEA_DX,
-        float(y[0]) + LAEA_H / 2 * LAEA_DX,
-    )
-
-
-def q_geotiff_laea(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EPSG:3035 (ETRS89 LAEA Europe — CORINE/EU-DEM grid) raster ingest:
-    a deterministic GeoTIFF whose geotransform is LAEA METERS
-    (GeoKeyDirectory code 3035) is decoded strip-parallel, pixel centers
-    inverse-projected through the from-scratch ellipsoidal LAEA
-    (functions/laea — Snyder oblique aspect + authalic series), then the
-    q_geotiff_zonal flow. The oracle replays the grid, laea.inverse_sql
-    and the zone predicates in SQL. Reference: tif_processor.py accepts
-    arbitrary projected CRSs via rasterio; EPSG:3035 is the most common
-    public raster CRS outside the engine's other four families."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
-
-    x0, y1 = _laea_anchor()
-    params = (
-        f"laea_v1|w={LAEA_W}|h={LAEA_H}|x0={x0!r}|y1={y1!r}|dx={LAEA_DX!r}|"
-        "vals=(px*29+py*19+3)%991/10|nodata=(px*5+py*11)%19==0:-9999"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/laea_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(LAEA_W)[None, :]
-        row = np.arange(LAEA_H)[:, None]
-        vals = ((px * 29 + row * 19 + 3) % 991) / 10.0
-        vals = np.where((px * 5 + row * 11) % 19 == 0, -9999.0, vals)
-        write_tiff(
-            path + ".tmp", vals, lon0=x0, lat1=y1, dx=LAEA_DX, dy=LAEA_DX,
-            nodata=-9999.0, crs="EPSG:3035",
-        )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-    )
-
-
-ALB_W, ALB_H, ALB_DX = 160, 120, 52000.0
-
-
-def _albers_anchor() -> tuple[float, float]:
-    """Top-left EPSG:5070 (x0, y1) of the Albers fixture grid: centered
-    on the joint meter-space bounding box of zones 2/8/9 (the three
-    fixture zones nearest the projection origin) so the grid overlaps
-    several zones, via the from-scratch ellipsoidal forward."""
-    import numpy as np
-
-    from giga_spatial_spark.functions import albers as AL
-
-    xs, ys = [], []
-    for zid in (2, 8, 9):
-        arr = np.asarray(ADMIN_POLYS[zid], dtype=np.float64)
-        x, y = AL.forward(arr[:, 0], arr[:, 1])
-        xs.append(x)
-        ys.append(y)
-    x = np.concatenate(xs)
-    y = np.concatenate(ys)
-    cx = (float(x.min()) + float(x.max())) / 2.0
-    cy = (float(y.min()) + float(y.max())) / 2.0
-    return (cx - ALB_W / 2 * ALB_DX, cy + ALB_H / 2 * ALB_DX)
-
-
-def q_geotiff_albers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EPSG:5070 (NAD83 Conus Albers — NLCD/LANDFIRE grid) raster
-    ingest: a deterministic GeoTIFF whose geotransform is Albers METERS
-    (GeoKeyDirectory code 5070) is decoded strip-parallel, pixel centers
-    inverse-projected through the from-scratch ellipsoidal Albers conic
-    (functions/albers — Snyder eqs 14-12..14-21 + authalic series), then
-    the q_geotiff_zonal flow. The oracle replays the grid,
-    albers.inverse_sql and the zone predicates in SQL. Reference:
-    tif_processor.py accepts arbitrary projected CRSs via rasterio;
-    EPSG:5070 is the standard US-wide public raster CRS (the most common
-    family after EPSG:3035, which landed last commit)."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
-
-    x0, y1 = _albers_anchor()
-    params = (
-        f"albers_v1|w={ALB_W}|h={ALB_H}|x0={x0!r}|y1={y1!r}|dx={ALB_DX!r}|"
-        "vals=(px*23+py*31+7)%977/10|nodata=(px*7+py*13)%23==0:-9999"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/albers_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(ALB_W)[None, :]
-        row = np.arange(ALB_H)[:, None]
-        vals = ((px * 23 + row * 31 + 7) % 977) / 10.0
-        vals = np.where((px * 7 + row * 13) % 23 == 0, -9999.0, vals)
-        write_tiff(
-            path + ".tmp", vals, lon0=x0, lat1=y1, dx=ALB_DX, dy=ALB_DX,
-            nodata=-9999.0, crs="EPSG:5070",
-        )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-    )
-
-
-LCC_W, LCC_H, LCC_DX = 160, 120, 89000.0
-
-
-def _lcc_anchor() -> tuple[float, float]:
-    """Top-left EPSG:2154 (x0, y1) of the Lambert-93 fixture grid:
-    centered on the joint meter-space bounding box of zones 3/5/7 via the
-    from-scratch ellipsoidal conformal forward."""
-    import numpy as np
-
-    from giga_spatial_spark.functions import lcc as LC
-
-    xs, ys = [], []
-    for zid in (3, 5, 7):
-        arr = np.asarray(ADMIN_POLYS[zid], dtype=np.float64)
-        x, y = LC.forward(arr[:, 0], arr[:, 1])
-        xs.append(x)
-        ys.append(y)
-    x = np.concatenate(xs)
-    y = np.concatenate(ys)
-    cx = (float(x.min()) + float(x.max())) / 2.0
-    cy = (float(y.min()) + float(y.max())) / 2.0
-    return (cx - LCC_W / 2 * LCC_DX, cy + LCC_H / 2 * LCC_DX)
-
-
-def q_geotiff_lcc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EPSG:2154 (RGF93 / Lambert-93 — the French national grid, and the
-    engine's representative of the Lambert conformal conic family that
-    national mapping agencies + US State Plane use) raster ingest: a
-    deterministic GeoTIFF whose geotransform is LCC METERS
-    (GeoKeyDirectory code 2154) is decoded strip-parallel, pixel centers
-    inverse-projected through the from-scratch ellipsoidal LCC
-    (functions/lcc — Snyder eqs 15-1..15-11 + conformal→geodetic series;
-    forward validated bit-level against published Lambert-93 coordinates
-    of Paris), then the q_geotiff_zonal flow. The oracle replays the
-    grid, lcc.inverse_sql and the zone predicates in SQL. Reference:
-    tif_processor.py accepts arbitrary projected CRSs via rasterio."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
-
-    x0, y1 = _lcc_anchor()
-    params = (
-        f"lcc_v1|w={LCC_W}|h={LCC_H}|x0={x0!r}|y1={y1!r}|dx={LCC_DX!r}|"
-        "vals=(px*37+py*17+11)%953/10|nodata=(px*3+py*17)%29==0:-9999"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/lcc_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(LCC_W)[None, :]
-        row = np.arange(LCC_H)[:, None]
-        vals = ((px * 37 + row * 17 + 11) % 953) / 10.0
-        vals = np.where((px * 3 + row * 17) % 29 == 0, -9999.0, vals)
-        write_tiff(
-            path + ".tmp", vals, lon0=x0, lat1=y1, dx=LCC_DX, dy=LCC_DX,
-            nodata=-9999.0, crs="EPSG:2154",
-        )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-    )
-
-
-POL_W, POL_H, POL_DX = 160, 120, 100000.0
-
-
-def _polar_anchor() -> tuple[float, float]:
-    """Top-left EPSG:3413 (x0, y1) of the polar-stereographic fixture
-    grid: centered on the joint meter-space bbox of zones 0/4/5 — which
-    straddles the north pole, so the inverse's ρ→0 branch is exercised
-    by real pixels."""
-    import numpy as np
-
-    from giga_spatial_spark.functions.polar import EPSG_3413
-
-    xs, ys = [], []
-    for zid in (0, 4, 5):
-        arr = np.asarray(ADMIN_POLYS[zid], dtype=np.float64)
-        x, y = EPSG_3413.forward(arr[:, 0], arr[:, 1])
-        xs.append(x)
-        ys.append(y)
-    x = np.concatenate(xs)
-    y = np.concatenate(ys)
-    cx = (float(x.min()) + float(x.max())) / 2.0
-    cy = (float(y.min()) + float(y.max())) / 2.0
-    return (cx - POL_W / 2 * POL_DX, cy + POL_H / 2 * POL_DX)
-
-
-def q_geotiff_polar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EPSG:3413 (NSIDC Sea Ice Polar Stereographic North — the standard
-    grid of polar public rasters: sea-ice concentration, ArcticDEM)
-    raster ingest: a deterministic GeoTIFF whose geotransform is polar-
-    stereographic METERS (GeoKeyDirectory code 3413) is decoded
-    strip-parallel, pixel centers inverse-projected through the
-    from-scratch ellipsoidal polar stereographic (functions/polar —
-    Snyder 21-33..21-41 + conformal series; the fixture grid contains
-    the pole itself, exercising the ρ→0 branch), then the
-    q_geotiff_zonal flow. The oracle replays the grid,
-    polar.inverse_sql and the zone predicates in SQL."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
-    from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
-
-    x0, y1 = _polar_anchor()
-    params = (
-        f"polar_v1|w={POL_W}|h={POL_H}|x0={x0!r}|y1={y1!r}|dx={POL_DX!r}|"
-        "vals=(px*47+py*19+17)%929/10|nodata=(px*17+py*5)%41==0:-9999"
-    )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/polar_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(POL_W)[None, :]
-        row = np.arange(POL_H)[:, None]
-        vals = ((px * 47 + row * 19 + 17) % 929) / 10.0
-        vals = np.where((px * 17 + row * 5) % 41 == 0, -9999.0, vals)
-        write_tiff(
-            path + ".tmp", vals, lon0=x0, lat1=y1, dx=POL_DX, dy=POL_DX,
-            nodata=-9999.0, crs="EPSG:3413",
-        )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-    )
+    crs: str | dict  # GeoKey CRS written into the fixture
+    proj: Any  # forward() / inverse_sql() of that CRS
+    # grid center: an int is that zone's centroid; a tuple is the joint
+    # projected bbox of those zones (so the grid overlaps several zones)
+    center: int | tuple[int, ...]
+    w: int
+    h: int
+    dx: float  # pixel size in projection meters (square pixels)
+    val: tuple[int, int, int, int]  # value = ((px*a + row*b + c) % m) / 10
+    nodata: tuple[int, int, int]  # nodata where (px*p + row*q) % r == 0
+    cte: str  # oracle CTE-name prefix (keeps each oracle's text unchanged)
 
 
 CUSTOM_CRS_PARAMS = {
@@ -2272,78 +1979,90 @@ CUSTOM_CRS_PARAMS = {
     "sp1": -30.0, "sp2": 5.0, "lat0": -10.0, "lon0": -80.0,
     "x0": 1500000.0, "y0": 2500000.0,
 }
-CUS_W, CUS_H, CUS_DX = 160, 120, 52000.0
+
+PROJECTED_GEOTIFFS = {
+    # ESRI:54009 Mollweide, GHSL tiles (ref handlers/ghsl.py:78-152); closed-form spherical inverse
+    "q_geotiff_mollweide": _ProjectedGeoTiff(
+        "ESRI:54009", mollweide, 2, 180, 140, 15000.0, (31, 17, 1, 997), (7, 13, 23), ""
+    ),
+    # EPSG:3035 ETRS89 LAEA Europe, CORINE/EU-DEM grid; Snyder oblique aspect + authalic series
+    "q_geotiff_laea": _ProjectedGeoTiff(
+        "EPSG:3035", laea, 3, 160, 120, 18000.0, (29, 19, 3, 991), (5, 11, 19), "l"
+    ),
+    # EPSG:5070 NAD83 Conus Albers, NLCD/LANDFIRE grid; Snyder 14-12..14-21 + authalic series
+    "q_geotiff_albers": _ProjectedGeoTiff(
+        "EPSG:5070", albers, (2, 8, 9), 160, 120, 52000.0, (23, 31, 7, 977), (7, 13, 23), "a"
+    ),
+    # EPSG:2154 RGF93 / Lambert-93, French national grid (LCC family); Snyder 15-1..15-11
+    "q_geotiff_lcc": _ProjectedGeoTiff(
+        "EPSG:2154", lcc, (3, 5, 7), 160, 120, 89000.0, (37, 17, 11, 953), (3, 17, 29), "c"
+    ),
+    # EPSG:3413 NSIDC polar stereographic north, sea-ice/ArcticDEM; the grid holds the pole (ρ→0)
+    "q_geotiff_polar": _ProjectedGeoTiff(
+        "EPSG:3413", EPSG_3413, (0, 4, 5), 160, 120, 100000.0, (47, 19, 17, 929), (17, 5, 41), "p"
+    ),
+    # user-defined Albers: GeoKey 32767 + GeoDoubleParams, no EPSG code (ref tif_processor.py)
+    "q_geotiff_custom_crs": _ProjectedGeoTiff(
+        CUSTOM_CRS_PARAMS, projection_from_params(CUSTOM_CRS_PARAMS), (2, 8, 9),
+        160, 120, 52000.0, (43, 29, 13, 941), (13, 7, 37), "u",
+    ),
+}
 
 
-def _custom_crs_anchor() -> tuple[float, float]:
-    """Top-left (x0, y1) of the user-defined-CRS fixture grid: centered
-    on the joint meter-space bbox of zones 2/8/9 under the CUSTOM Albers
-    parameters (no EPSG code names them)."""
+def _projected_anchor(spec: _ProjectedGeoTiff) -> tuple[float, float]:
+    """Top-left projected (x0, y1) of a family fixture grid, centered per
+    ``spec.center`` with the from-scratch forward projection."""
     import numpy as np
 
-    from giga_spatial_spark.functions.crs import projection_from_params
+    if isinstance(spec.center, int):
+        cx, cy = polygon_centroid(ADMIN_POLYS[spec.center])
+        x, y = spec.proj.forward(np.array([cx]), np.array([cy]))
+        x_mid, y_mid = float(x[0]), float(y[0])
+    else:
+        xs, ys = [], []
+        for zid in spec.center:
+            arr = np.asarray(ADMIN_POLYS[zid], dtype=np.float64)
+            x, y = spec.proj.forward(arr[:, 0], arr[:, 1])
+            xs.append(x)
+            ys.append(y)
+        x = np.concatenate(xs)
+        y = np.concatenate(ys)
+        x_mid = (float(x.min()) + float(x.max())) / 2.0
+        y_mid = (float(y.min()) + float(y.max())) / 2.0
+    return (x_mid - spec.w / 2 * spec.dx, y_mid + spec.h / 2 * spec.dx)
 
-    pj = projection_from_params(CUSTOM_CRS_PARAMS)
-    xs, ys = [], []
-    for zid in (2, 8, 9):
-        arr = np.asarray(ADMIN_POLYS[zid], dtype=np.float64)
-        x, y = pj.forward(arr[:, 0], arr[:, 1])
-        xs.append(x)
-        ys.append(y)
-    x = np.concatenate(xs)
-    y = np.concatenate(ys)
-    cx = (float(x.min()) + float(x.max())) / 2.0
-    cy = (float(y.min()) + float(y.max())) / 2.0
-    return (cx - CUS_W / 2 * CUS_DX, cy + CUS_H / 2 * CUS_DX)
 
-
-def q_geotiff_custom_crs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """USER-DEFINED projection ingest — the reference accepts ANY
-    rasterio CRS (tif_processor.py), including rasters whose GeoTIFF
-    GeoKeys carry ProjectedCSTypeGeoKey=32767 + explicit parameters
-    rather than an EPSG code. A fixture tagged with a custom Albers
-    (southern-hemisphere standard parallels no EPSG code names) is
-    written with GeoKeyDirectory + GeoDoubleParams, the reader rebuilds
-    the parameterized conic (crs.projection_from_params → AlbersConic),
-    and pixel centers inverse-project through it strip-parallel. The
-    oracle replays the SAME instance's inverse_sql — parameter coverage,
-    not a fixed code registry, is what is hash-checked."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
+def q_geotiff_projected(
+    spec: _ProjectedGeoTiff, spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Projected-CRS raster ingest, one query per PROJECTED_GEOTIFFS row
+    (reference tif_processor.py hands any rasterio CRS to one zonal flow):
+    a deterministic GeoTIFF whose geotransform is in projection METERS
+    (GeoKeyDirectory-tagged, or GeoDoubleParams for a user-defined CRS) is
+    decoded strip-parallel, pixel centers inverse-projected to lon/lat
+    through the reader's from-scratch projection, then the q_geotiff_zonal
+    flow. The oracle (_geotiff_projected_sql) replays the grid, the same
+    projection's inverse_sql and the zone predicates in SQL."""
     from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_tiff
 
-    x0, y1 = _custom_crs_anchor()
+    x0, y1 = _projected_anchor(spec)
+    a, b, c, m = spec.val
+    p, q, r = spec.nodata
     params = (
-        f"customcrs_v1|{sorted(CUSTOM_CRS_PARAMS.items())!r}|w={CUS_W}|"
-        f"h={CUS_H}|x0={x0!r}|y1={y1!r}|dx={CUS_DX!r}|"
-        "vals=(px*43+py*29+13)%941/10|nodata=(px*13+py*7)%37==0:-9999"
+        f"projected_v1|crs={spec.crs!r}|w={spec.w}|h={spec.h}|x0={x0!r}|"
+        f"y1={y1!r}|dx={spec.dx!r}|vals=(px*{a}+py*{b}+{c})%{m}/10|"
+        f"nodata=(px*{p}+py*{q})%{r}==0:-9999"
     )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/customcrs_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(CUS_W)[None, :]
-        row = np.arange(CUS_H)[:, None]
-        vals = ((px * 43 + row * 29 + 13) % 941) / 10.0
-        vals = np.where((px * 13 + row * 7) % 37 == 0, -9999.0, vals)
+
+    def build(stage: str) -> None:
         write_tiff(
-            path + ".tmp", vals, lon0=x0, lat1=y1, dx=CUS_DX, dy=CUS_DX,
-            nodata=-9999.0, crs=CUSTOM_CRS_PARAMS,
+            stage, _formula_grid(spec.w, spec.h, spec.val, spec.nodata),
+            lon0=x0, lat1=y1, dx=spec.dx, dy=spec.dx, nodata=-9999.0,
+            crs=spec.crs,
         )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
-        F.count(F.lit(1)).alias("px_count"),
-        (F.sum(F.round(F.col("value") * 10).cast("bigint")) / 10.0).alias("v_sum"),
-        F.round(F.min("value"), 1).alias("v_min"),
-        F.round(F.max("value"), 1).alias("v_max"),
-    )
+
+    path = _cached_fixture(params, build, ".tif")
+    return _zonal_stats(tiff_pixel_table(spark, path))
 
 
 def q_cog_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2360,12 +2079,6 @@ def q_cog_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags are all under the hash. Aggregates use integer 1/40-units
     (averages of n∈{1..4} tenth-valued pixels are exact multiples of
     0.025) to stay inside the house centi-unit rounding envelope."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
     from giga_spatial_spark.operators.raster import RasterMeta
     from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_cog
 
@@ -2375,28 +2088,23 @@ def q_cog_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"lat1={rmeta.lat1!r}|dx={rmeta.dx!r}|dy={rmeta.dy!r}|"
         "vals=(px*41+row*13+5)%983/10|nodata=(px*11+row*3)%31==0:-9999|ov=64"
     )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/cog_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        px = np.arange(rmeta.width)[None, :]
-        row = np.arange(rmeta.height)[:, None]  # row 0 = north edge
-        vals = ((px * 41 + row * 13 + 5) % 983) / 10.0
-        vals = np.where((px * 11 + row * 3) % 31 == 0, -9999.0, vals)
+
+    def build(stage: str) -> None:
+        # row 0 = north edge
+        vals = _formula_grid(rmeta.width, rmeta.height, (41, 13, 5, 983), (11, 3, 31))
         write_cog(
-            path + ".tmp", vals, lon0=rmeta.lon0, lat1=rmeta.lat1,
+            stage, vals, lon0=rmeta.lon0, lat1=rmeta.lat1,
             dx=rmeta.dx, dy=rmeta.dy, nodata=-9999.0,
             min_overview_size=64,
         )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path, level=1)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
-    return matches.groupBy("zone_id").agg(
+
+    path = _cached_fixture(params, build, ".tif")
+    v40 = F.round(F.col("value") * 40).cast("bigint")
+    return _zone_pixels(tiff_pixel_table(spark, path, level=1)).groupBy("zone_id").agg(
         F.count(F.lit(1)).alias("px_count"),
-        F.sum(F.round(F.col("value") * 40).cast("bigint")).alias("v_sum40"),
-        F.min(F.round(F.col("value") * 40).cast("bigint")).alias("v_min40"),
-        F.max(F.round(F.col("value") * 40).cast("bigint")).alias("v_max40"),
+        F.sum(v40).alias("v_sum40"),
+        F.min(v40).alias("v_min40"),
+        F.max(v40).alias("v_max40"),
     )
 
 
@@ -2409,12 +2117,6 @@ def q_cog_overview_int(spark: SparkSession, sf_dir: str) -> DataFrame:
     zonally aggregated. The pipeline is all-integer end to end, so the
     oracle replays the pyramid arithmetic with BIGINT ops only — no
     float rounding envelope at all."""
-    import getpass
-    import hashlib
-    import os
-
-    import numpy as np
-
     from giga_spatial_spark.operators.raster import RasterMeta
     from giga_spatial_spark.sources.geotiff import tiff_pixel_table, write_cog
 
@@ -2424,29 +2126,55 @@ def q_cog_overview_int(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"lat1={rmeta.lat1!r}|dx={rmeta.dx!r}|dy={rmeta.dy!r}|"
         "vals=(px*37+row*17+3)%251|nodata=(px*7+row*5)%29==0:255|ov=64"
     )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    path = f"/tmp/spark_graft_geotiff_{getpass.getuser()}/cogint_{key}.tif"
-    if not os.path.exists(path):
-        os.makedirs(os.path.dirname(path), exist_ok=True)
+
+    def build(stage: str) -> None:
+        import numpy as np
+
         px = np.arange(rmeta.width)[None, :]
         row = np.arange(rmeta.height)[:, None]  # row 0 = north edge
         vals = ((px * 37 + row * 17 + 3) % 251).astype(np.uint8)
         vals = np.where((px * 7 + row * 5) % 29 == 0, np.uint8(255), vals)
         write_cog(
-            path + ".tmp", vals, lon0=rmeta.lon0, lat1=rmeta.lat1,
+            stage, vals, lon0=rmeta.lon0, lat1=rmeta.lat1,
             dx=rmeta.dx, dy=rmeta.dy, nodata=255, dtype="uint8",
             min_overview_size=64,
         )
-        os.replace(path + ".tmp", path)
-    pixels = tiff_pixel_table(spark, path, level=1)
-    valid = pixels.where(F.col("value").isNotNull())
-    matches = pip_join_rtree(valid, ADMIN_POLYS, lon="lon", lat="lat", zoom=PIP_ZOOM)
+
+    path = _cached_fixture(params, build, ".tif")
     v = F.col("value").cast("bigint")
-    return matches.groupBy("zone_id").agg(
+    return _zone_pixels(tiff_pixel_table(spark, path, level=1)).groupBy("zone_id").agg(
         F.count(F.lit(1)).alias("px_count"),
         F.sum(v).alias("v_sum"),
         F.min(v).alias("v_min"),
         F.max(v).alias("v_max"),
+    )
+
+
+def _geotiff_projected_sql(spec: _ProjectedGeoTiff) -> str:
+    """Oracle of q_geotiff_projected: replay the pixel grid with range(),
+    inverse-project pixel centers with the row's inverse_sql, then the
+    convex zone predicates and the same aggregate."""
+    x0, y1 = _projected_anchor(spec)
+    w, dx, t = spec.w, spec.dx, spec.cte
+    a, b, c, m = spec.val
+    p, q, r = spec.nodata
+    lon_sql, lat_sql = spec.proj.inverse_sql(
+        f"({x0!r} + ((i % {w}) + 0.5) * {dx!r})",
+        f"({y1!r} - ((i // {w}) + 0.5) * {dx!r})",
+    )
+    val = (
+        f"CASE WHEN ((i % {w}) * {p} + (i // {w}) * {q}) % {r} = 0 "
+        f"THEN NULL ELSE (((i % {w}) * {a} + (i // {w}) * {b} + {c}) % {m}) / 10.0 END"
+    )
+    return (
+        f"WITH {t}raster AS (SELECT {val} AS value, {lon_sql} AS lon, "
+        f"{lat_sql} AS lat FROM range({w * spec.h}) t(i)), "
+        f"{t}valid AS MATERIALIZED (SELECT * FROM {t}raster WHERE value IS NOT NULL), "
+        f"m AS ({_zone_values_sql(t + 'valid')}) "
+        "SELECT zone_id, count(*) AS px_count, "
+        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
+        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
+        "FROM m GROUP BY zone_id"
     )
 
 
@@ -3084,84 +2812,75 @@ def q_pip_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _geo_fixture(kind: str) -> str:
-    """Build (once, per-user, content-keyed — see q_geotiff_zonal) an admin-
+    """Build (once, per-user, content-keyed — see _cached_fixture) an admin-
     polygon layer in the requested geo format and return its path. The
     vertex doubles round-trip bit-exactly in every format (.shp/.gpkg store
     IEEE doubles; .kml coordinates are written with repr(), which Python
     parses back exactly), so PIP membership is identical to ADMIN_POLYS."""
-    import getpass
-    import hashlib
-    import os
-
     params = "admin_v1|" + "|".join(
         f"{zid}:{poly.tobytes().hex()}" for zid, poly in sorted(ADMIN_POLYS.items())
     )
-    key = hashlib.sha256(params.encode()).hexdigest()[:16]
-    d = f"/tmp/spark_graft_geofix_{getpass.getuser()}/{key}"
-    os.makedirs(d, exist_ok=True)
-    path = f"{d}/admin.{kind}"
-    if os.path.exists(path):
-        return path
-    tmp = path + ".tmp"
     if kind == "shp":
         from giga_spatial_spark.sources.shapefile import write_shapefile
 
-        feats = [
-            ("Polygon", p, {"zone_id": zid}) for zid, p in sorted(ADMIN_POLYS.items())
-        ]
-        write_shapefile(feats, f"{d}/.build_admin.shp")
-        # sidecars first, the existence-checked .shp last
-        for ext in (".shx", ".dbf", ".shp"):
-            os.replace(f"{d}/.build_admin{ext}", f"{d}/admin{ext}")
-        return path
+        def build_shp(stage: str) -> None:
+            feats = [
+                ("Polygon", p, {"zone_id": zid})
+                for zid, p in sorted(ADMIN_POLYS.items())
+            ]
+            write_shapefile(feats, stage)
+
+        return _cached_fixture(params, build_shp, ".shp", sidecars=(".shx", ".dbf"))
     if kind == "fgb":
         from giga_spatial_spark.sources.fgb import write_fgb
 
-        feats = [
-            ("Polygon", [p.tolist()], {"zone_id": str(zid)})
-            for zid, p in sorted(ADMIN_POLYS.items())
-        ]
-        write_fgb(feats, tmp, index_node_size=4)
-        os.replace(tmp, path)
-        return path
+        def build_fgb(stage: str) -> None:
+            feats = [
+                ("Polygon", [p.tolist()], {"zone_id": str(zid)})
+                for zid, p in sorted(ADMIN_POLYS.items())
+            ]
+            write_fgb(feats, stage, index_node_size=4)
+
+        return _cached_fixture(params, build_fgb, ".fgb")
     if kind == "kml":
-        pms = []
-        for zid, poly in sorted(ADMIN_POLYS.items()):
-            coords = " ".join(f"{x!r},{y!r}" for x, y in poly)
-            first = f"{poly[0][0]!r},{poly[0][1]!r}"
-            pms.append(
-                "<Placemark><ExtendedData>"
-                f'<Data name="zone_id"><value>{zid}</value></Data></ExtendedData>'
-                "<Polygon><outerBoundaryIs><LinearRing><coordinates>"
-                f"{coords} {first}"
-                "</coordinates></LinearRing></outerBoundaryIs></Polygon></Placemark>"
+
+        def build_kml(stage: str) -> None:
+            pms = []
+            for zid, poly in sorted(ADMIN_POLYS.items()):
+                coords = " ".join(f"{x!r},{y!r}" for x, y in poly)
+                first = f"{poly[0][0]!r},{poly[0][1]!r}"
+                pms.append(
+                    "<Placemark><ExtendedData>"
+                    f'<Data name="zone_id"><value>{zid}</value></Data></ExtendedData>'
+                    "<Polygon><outerBoundaryIs><LinearRing><coordinates>"
+                    f"{coords} {first}"
+                    "</coordinates></LinearRing></outerBoundaryIs></Polygon></Placemark>"
+                )
+            doc = (
+                '<?xml version="1.0" encoding="UTF-8"?>'
+                '<kml xmlns="http://www.opengis.net/kml/2.2"><Document>'
+                + "".join(pms)
+                + "</Document></kml>"
             )
-        doc = (
-            '<?xml version="1.0" encoding="UTF-8"?>'
-            '<kml xmlns="http://www.opengis.net/kml/2.2"><Document>'
-            + "".join(pms)
-            + "</Document></kml>"
-        )
-        with open(tmp, "w", encoding="utf-8") as f:
-            f.write(doc)
-        os.replace(tmp, path)
-        return path
+            with open(stage, "w", encoding="utf-8") as f:
+                f.write(doc)
+
+        return _cached_fixture(params, build_kml, ".kml")
     raise ValueError(kind)
 
 
 def _geo_fixture_gpkg(spark: SparkSession) -> str:
-    """GPKG fixture derives from the .shp one (write_gpkg needs a frame)."""
-    import os
+    """GPKG fixture derives from the .shp one (write_gpkg needs a frame), so
+    it is keyed by the content-keyed .shp path."""
+    from giga_spatial_spark.sources.gpkg import write_gpkg
+    from giga_spatial_spark.sources.shapefile import read_shapefile
 
     shp = _geo_fixture("shp")
-    path = shp[:-4] + ".gpkg"
-    if not os.path.exists(path):
-        from giga_spatial_spark.sources.gpkg import write_gpkg
-        from giga_spatial_spark.sources.shapefile import read_shapefile
-
-        write_gpkg(read_shapefile(spark, shp), path + ".tmp", table="admin")
-        os.replace(path + ".tmp", path)
-    return path
+    return _cached_fixture(
+        f"gpkg_v1|{shp}",
+        lambda stage: write_gpkg(read_shapefile(spark, shp), stage, table="admin"),
+        ".gpkg",
+    )
 
 
 def _pip_from_feature_table(
@@ -3654,6 +3373,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    projected = {
+        name: partial(q_geotiff_projected, spec)
+        for name, spec in PROJECTED_GEOTIFFS.items()
+    }
     return {
         "q_tile_assign": q_tile_assign,
         "q_pip_tag": q_pip_tag,
@@ -3706,14 +3429,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_normalize_strings": q_normalize_strings,
         "q_zonal_raster": q_zonal_raster,
         "q_geotiff_zonal": q_geotiff_zonal,
-        "q_geotiff_mollweide": q_geotiff_mollweide,
-        "q_geotiff_laea": q_geotiff_laea,
-        "q_geotiff_albers": q_geotiff_albers,
-        "q_geotiff_lcc": q_geotiff_lcc,
+        "q_geotiff_mollweide": projected["q_geotiff_mollweide"],
+        "q_geotiff_laea": projected["q_geotiff_laea"],
+        "q_geotiff_albers": projected["q_geotiff_albers"],
+        "q_geotiff_lcc": projected["q_geotiff_lcc"],
         "q_cog_overview": q_cog_overview,
         "q_cog_overview_int": q_cog_overview_int,
-        "q_geotiff_custom_crs": q_geotiff_custom_crs,
-        "q_geotiff_polar": q_geotiff_polar,
+        "q_geotiff_custom_crs": projected["q_geotiff_custom_crs"],
+        "q_geotiff_polar": projected["q_geotiff_polar"],
         "q_raster_sample": q_raster_sample,
         "q_raster_multiband": q_raster_multiband,
         "q_raster_merge": q_raster_merge,
@@ -3782,6 +3505,16 @@ def _pip_pairs_sql() -> str:
             f"FROM ({_docs_sql()}) d WHERE {pred}"
         )
     return " UNION ALL ".join(clauses)
+
+
+def _zone_values_sql(src: str) -> str:
+    """(zone_id, value) of every pixel row of ``src`` (lon, lat, value)
+    inside an admin zone: one convex-predicate SELECT per zone."""
+    return " UNION ALL ".join(
+        f"SELECT {zid} AS zone_id, r.value FROM {src} r WHERE "
+        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
+        for zid, poly in sorted(ADMIN_POLYS.items())
+    )
 
 
 def _k_factor_oracle_sql(docs: str) -> str:
@@ -4108,15 +3841,9 @@ def oracle_sql() -> dict[str, str]:
 
     rmeta = RasterMeta()
     raster = synthetic_raster_sql(rmeta)
-    zone_pip_clauses = []
-    for zid, poly in sorted(ADMIN_POLYS.items()):
-        pred = synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        zone_pip_clauses.append(
-            f"SELECT {zid} AS zone_id, r.value FROM valid r WHERE {pred}"
-        )
     zonal_raster = (
         f"WITH raster AS ({raster}), valid AS (SELECT * FROM raster WHERE value IS NOT NULL), "
-        f"m AS ({' UNION ALL '.join(zone_pip_clauses)}) "
+        f"m AS ({_zone_values_sql('valid')}) "
         "SELECT zone_id, count(*) AS px_count, "
         "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
         "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max, "
@@ -4213,163 +3940,6 @@ def oracle_sql() -> dict[str, str]:
         "SELECT agg.h3_cell, agg.doc_count FROM agg JOIN m USING (h3_cell)"
     )
 
-    from giga_spatial_spark.functions import mollweide as _M
-
-    mx0, my1 = _mollweide_anchor()
-    mx_sql = f"({mx0!r} + ((i % {MOLL_W}) + 0.5) * {MOLL_DX!r})"
-    my_sql = f"({my1!r} - ((i // {MOLL_W}) + 0.5) * {MOLL_DX!r})"
-    mlon_sql, mlat_sql = _M.inverse_sql(mx_sql, my_sql)
-    moll_val = (
-        f"CASE WHEN ((i % {MOLL_W}) * 7 + (i // {MOLL_W}) * 13) % 23 = 0 "
-        f"THEN NULL ELSE (((i % {MOLL_W}) * 31 + (i // {MOLL_W}) * 17 + 1) % 997) / 10.0 END"
-    )
-    moll_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM valid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    moll_zonal = (
-        f"WITH raster AS (SELECT {moll_val} AS value, {mlon_sql} AS lon, "
-        f"{mlat_sql} AS lat FROM range({MOLL_W * MOLL_H}) t(i)), "
-        "valid AS MATERIALIZED (SELECT * FROM raster WHERE value IS NOT NULL), "
-        f"m AS ({moll_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
-        "FROM m GROUP BY zone_id"
-    )
-
-    from giga_spatial_spark.functions import laea as _L
-
-    lx0, ly1 = _laea_anchor()
-    lx_sql = f"({lx0!r} + ((i % {LAEA_W}) + 0.5) * {LAEA_DX!r})"
-    ly_sql = f"({ly1!r} - ((i // {LAEA_W}) + 0.5) * {LAEA_DX!r})"
-    llon_sql, llat_sql = _L.inverse_sql(lx_sql, ly_sql)
-    laea_val = (
-        f"CASE WHEN ((i % {LAEA_W}) * 5 + (i // {LAEA_W}) * 11) % 19 = 0 "
-        f"THEN NULL ELSE (((i % {LAEA_W}) * 29 + (i // {LAEA_W}) * 19 + 3) % 991) / 10.0 END"
-    )
-    laea_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM lvalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    laea_zonal = (
-        f"WITH lraster AS (SELECT {laea_val} AS value, {llon_sql} AS lon, "
-        f"{llat_sql} AS lat FROM range({LAEA_W * LAEA_H}) t(i)), "
-        "lvalid AS MATERIALIZED (SELECT * FROM lraster WHERE value IS NOT NULL), "
-        f"m AS ({laea_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
-        "FROM m GROUP BY zone_id"
-    )
-
-    from giga_spatial_spark.functions import albers as _AL
-
-    ax0, ay1 = _albers_anchor()
-    ax_sql = f"({ax0!r} + ((i % {ALB_W}) + 0.5) * {ALB_DX!r})"
-    ay_sql = f"({ay1!r} - ((i // {ALB_W}) + 0.5) * {ALB_DX!r})"
-    alon_sql, alat_sql = _AL.inverse_sql(ax_sql, ay_sql)
-    alb_val = (
-        f"CASE WHEN ((i % {ALB_W}) * 7 + (i // {ALB_W}) * 13) % 23 = 0 "
-        f"THEN NULL ELSE (((i % {ALB_W}) * 23 + (i // {ALB_W}) * 31 + 7) % 977) / 10.0 END"
-    )
-    alb_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM avalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    albers_zonal = (
-        f"WITH araster AS (SELECT {alb_val} AS value, {alon_sql} AS lon, "
-        f"{alat_sql} AS lat FROM range({ALB_W * ALB_H}) t(i)), "
-        "avalid AS MATERIALIZED (SELECT * FROM araster WHERE value IS NOT NULL), "
-        f"m AS ({alb_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
-        "FROM m GROUP BY zone_id"
-    )
-
-    from giga_spatial_spark.functions import lcc as _LC
-
-    cx0, cy1 = _lcc_anchor()
-    cx_sql = f"({cx0!r} + ((i % {LCC_W}) + 0.5) * {LCC_DX!r})"
-    cy_sql = f"({cy1!r} - ((i // {LCC_W}) + 0.5) * {LCC_DX!r})"
-    clon_sql, clat_sql = _LC.inverse_sql(cx_sql, cy_sql)
-    lcc_val = (
-        f"CASE WHEN ((i % {LCC_W}) * 3 + (i // {LCC_W}) * 17) % 29 = 0 "
-        f"THEN NULL ELSE (((i % {LCC_W}) * 37 + (i // {LCC_W}) * 17 + 11) % 953) / 10.0 END"
-    )
-    lcc_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM cvalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    lcc_zonal = (
-        f"WITH craster AS (SELECT {lcc_val} AS value, {clon_sql} AS lon, "
-        f"{clat_sql} AS lat FROM range({LCC_W * LCC_H}) t(i)), "
-        "cvalid AS MATERIALIZED (SELECT * FROM craster WHERE value IS NOT NULL), "
-        f"m AS ({lcc_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
-        "FROM m GROUP BY zone_id"
-    )
-
-    from giga_spatial_spark.functions.polar import EPSG_3413 as _P13
-
-    px0, py1 = _polar_anchor()
-    px_sql = f"({px0!r} + ((i % {POL_W}) + 0.5) * {POL_DX!r})"
-    py_sql = f"({py1!r} - ((i // {POL_W}) + 0.5) * {POL_DX!r})"
-    plon_sql, plat_sql = _P13.inverse_sql(px_sql, py_sql)
-    pol_val = (
-        f"CASE WHEN ((i % {POL_W}) * 17 + (i // {POL_W}) * 5) % 41 = 0 "
-        f"THEN NULL ELSE (((i % {POL_W}) * 47 + (i // {POL_W}) * 19 + 17) % 929) / 10.0 END"
-    )
-    pol_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM pvalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    polar_zonal = (
-        f"WITH praster AS (SELECT {pol_val} AS value, {plon_sql} AS lon, "
-        f"{plat_sql} AS lat FROM range({POL_W * POL_H}) t(i)), "
-        "pvalid AS MATERIALIZED (SELECT * FROM praster WHERE value IS NOT NULL), "
-        f"m AS ({pol_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
-        "FROM m GROUP BY zone_id"
-    )
-
-    from giga_spatial_spark.functions.crs import projection_from_params as _pfp
-
-    _cpj = _pfp(CUSTOM_CRS_PARAMS)
-    ux0, uy1 = _custom_crs_anchor()
-    ux_sql = f"({ux0!r} + ((i % {CUS_W}) + 0.5) * {CUS_DX!r})"
-    uy_sql = f"({uy1!r} - ((i // {CUS_W}) + 0.5) * {CUS_DX!r})"
-    ulon_sql, ulat_sql = _cpj.inverse_sql(ux_sql, uy_sql)
-    cus_val = (
-        f"CASE WHEN ((i % {CUS_W}) * 13 + (i // {CUS_W}) * 7) % 37 = 0 "
-        f"THEN NULL ELSE (((i % {CUS_W}) * 43 + (i // {CUS_W}) * 29 + 13) % 941) / 10.0 END"
-    )
-    cus_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM uvalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
-    custom_crs_zonal = (
-        f"WITH uraster AS (SELECT {cus_val} AS value, {ulon_sql} AS lon, "
-        f"{ulat_sql} AS lat FROM range({CUS_W * CUS_H}) t(i)), "
-        "uvalid AS MATERIALIZED (SELECT * FROM uraster WHERE value IS NOT NULL), "
-        f"m AS ({cus_pip}) "
-        "SELECT zone_id, count(*) AS px_count, "
-        "sum(cast(round(value * 10, 0) as bigint)) / 10.0 AS v_sum, "
-        "round(min(value), 1) AS v_min, round(max(value), 1) AS v_max "
-        "FROM m GROUP BY zone_id"
-    )
-
     # COG overview-1 oracle: replay the full-res formula grid and the
     # EXPLICIT ((a+b)+(c+d))/n 2x2 block average (downsample2_mean's
     # documented operation order — bit-identical doubles in both engines)
@@ -4396,11 +3966,6 @@ def oracle_sql() -> dict[str, str]:
         f"((coalesce({_oa}, 0.0) + coalesce({_ob}, 0.0)) + "
         f"(coalesce({_oc}, 0.0) + coalesce({_od}, 0.0)))"
     )
-    cog_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM ovalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
     cog_overview = (
         f"WITH og AS (SELECT i % {_ow} AS c, i // {_ow} AS r "
         f"FROM range({_ow * _oh}) t(i)), "
@@ -4409,7 +3974,7 @@ def oracle_sql() -> dict[str, str]:
         f"({_rm.lon0!r} + (c + 0.5) * {2.0 * _rm.dx!r}) AS lon, "
         f"({_rm.lat1!r} - (r + 0.5) * {2.0 * _rm.dy!r}) AS lat FROM og), "
         "ovalid AS MATERIALIZED (SELECT * FROM ov WHERE value IS NOT NULL), "
-        f"m AS ({cog_pip}) "
+        f"m AS ({_zone_values_sql('ovalid')}) "
         "SELECT zone_id, count(*) AS px_count, "
         "cast(sum(cast(round(value * 40, 0) as bigint)) as bigint) AS v_sum40, "
         "min(cast(round(value * 40, 0) as bigint)) AS v_min40, "
@@ -4437,11 +4002,6 @@ def oracle_sql() -> dict[str, str]:
         f"((coalesce({_ia}, 0) + coalesce({_ib}, 0)) + "
         f"(coalesce({_ic}, 0) + coalesce({_id}, 0)))"
     )
-    cogint_pip = " UNION ALL ".join(
-        f"SELECT {zid} AS zone_id, r.value FROM ivalid r WHERE "
-        + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-        for zid, poly in sorted(ADMIN_POLYS.items())
-    )
     cog_overview_int = (
         f"WITH og AS (SELECT i % {_ow} AS c, i // {_ow} AS r "
         f"FROM range({_ow * _oh}) t(i)), "
@@ -4450,7 +4010,7 @@ def oracle_sql() -> dict[str, str]:
         f"({_rm.lon0!r} + (c + 0.5) * {2.0 * _rm.dx!r}) AS lon, "
         f"({_rm.lat1!r} - (r + 0.5) * {2.0 * _rm.dy!r}) AS lat FROM og), "
         "ivalid AS MATERIALIZED (SELECT * FROM iv WHERE value IS NOT NULL), "
-        f"m AS ({cogint_pip}) "
+        f"m AS ({_zone_values_sql('ivalid')}) "
         "SELECT zone_id, count(*) AS px_count, "
         "cast(sum(value) as bigint) AS v_sum, "
         "cast(min(value) as bigint) AS v_min, "
@@ -4571,10 +4131,10 @@ def oracle_sql() -> dict[str, str]:
         "q_grid_filter": grid_filter,
         "q_zonal_raster": zonal_raster,
         "q_geotiff_zonal": zonal_raster,
-        "q_geotiff_mollweide": moll_zonal,
-        "q_geotiff_laea": laea_zonal,
-        "q_geotiff_albers": albers_zonal,
-        "q_geotiff_lcc": lcc_zonal,
+        **{
+            name: _geotiff_projected_sql(spec)
+            for name, spec in PROJECTED_GEOTIFFS.items()
+        },
         "q_cog_overview": cog_overview,
         "q_image_decode": (
             "WITH dims AS (SELECT doc_id, 8 + doc_id % 9 AS w, "
@@ -4589,8 +4149,6 @@ def oracle_sql() -> dict[str, str]:
             "cast(max(v) as bigint) AS px_max FROM px GROUP BY doc_id"
         ),
         "q_cog_overview_int": cog_overview_int,
-        "q_geotiff_custom_crs": custom_crs_zonal,
-        "q_geotiff_polar": polar_zonal,
         "q_h3_parent": (
             f"WITH h3f AS ({H3S.h3_cell_sql(docs, H3_FINE_RES)}) "
             f"SELECT ((h3_cell & {_H3_RES_MASK}) | {H3_PARENT_RES << 52} | {_H3_FILL}) "
@@ -4615,12 +4173,7 @@ def oracle_sql() -> dict[str, str]:
                 + ") WHERE value IS NOT NULL"
                 for b in (1, 2, 3)
             )
-            + "), m AS ("
-            + " UNION ALL ".join(
-                f"SELECT {zid} AS zone_id, r.value FROM u r WHERE "
-                + synth.convex_contains_sql(poly, "r.lon", "r.lat")
-                for zid, poly in sorted(ADMIN_POLYS.items())
-            )
+            + f"), m AS ({_zone_values_sql('u')}"
             + ") SELECT zone_id, sum(value) / 10.0 AS pop_sum "
             "FROM m GROUP BY zone_id"
         ),

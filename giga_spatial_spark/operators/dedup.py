@@ -564,11 +564,11 @@ def duplicated_passages(
     interpreted without CSE, so an inline split() re-runs per window
     (measured 8× slower).
 
-    ``key``: 'md5' shuffles 32-char hex keys and is DuckDB-replayable
-    (the oracle mode); 'xxhash64' shuffles 8-byte int64 keys — the
-    production mode for corpus-scale runs (measured 1.3× end-to-end on
-    275M windows, identical flag counts), at a negligible 64-bit
-    collision risk.
+    ``key``: 'md5' shuffles the 16 raw digest bytes (``unhex(md5)``) and
+    is DuckDB-replayable (the oracle mode); 'xxhash64' shuffles 8-byte
+    int64 keys — the production mode for corpus-scale runs (measured 1.3×
+    end-to-end on 275M windows, identical flag counts), at a negligible
+    64-bit collision risk.
     """
     if key == "md5":
         # shuffle the 16 RAW digest bytes, not the 32-char hex string

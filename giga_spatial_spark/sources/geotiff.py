@@ -27,6 +27,7 @@ py = height-1-row), value NULL where the sample equals nodata.
 
 from __future__ import annotations
 
+import os
 import struct
 import zlib
 from dataclasses import dataclass
@@ -96,10 +97,22 @@ def _read_values(f, bo: str, typ: int, count: int, raw: bytes):
         data = raw[:size]
     else:
         (off,) = struct.unpack(bo + "I", raw)
+        # a corrupt count or offset must not size an allocation: check the
+        # value's extent against the real file before reading it
+        if off + size > os.fstat(f.fileno()).st_size:
+            raise ValueError(
+                f"corrupt TIFF tag: {count} values of type {typ} at offset "
+                f"{off} run past the end of the file"
+            )
         pos = f.tell()
         f.seek(off)
         data = f.read(size)
         f.seek(pos)
+        if len(data) != size:
+            raise ValueError(
+                f"corrupt TIFF tag: short read ({len(data)} of {size} bytes) "
+                f"at offset {off}"
+            )
     if typ == 2:  # ASCII
         return data.split(b"\x00")[0].decode("ascii", "replace")
     fmt = _TYPE_FMT.get(typ)

@@ -954,3 +954,85 @@ def test_downsample2_mean_int_no_nodata_odd_edges():
                 if rr < 7 and cc < 9
             ]
             assert gi[r, c] == (2 * sum(blk) + len(blk)) // (2 * len(blk))
+
+
+_FIXTURE_CHUNKS = 40
+
+
+def _fixture_chunk(i: int) -> bytes:
+    return bytes([i % 251]) * 4096
+
+
+def _slow_fixture_build(stage: str) -> None:
+    """Writes a known payload slowly, in chunks, so concurrent builds of one
+    fixture overlap in time."""
+    import time
+
+    with open(stage, "wb") as f:
+        for i in range(_FIXTURE_CHUNKS):
+            f.write(_fixture_chunk(i))
+            f.flush()
+            time.sleep(0.005)
+
+
+def _cached_fixture_worker(params: str, barrier, out) -> None:
+    import __spark_entry__ as E
+
+    barrier.wait(timeout=120)
+    path = E._cached_fixture(params, _slow_fixture_build, ".bin")
+    with open(path, "rb") as f:
+        out.put((path, f.read()))  # what this caller sees on return
+
+
+def test_cached_fixture_concurrent_builders_agree():
+    """More spawn-context processes than cores build ONE fixture key at the
+    same moment: every caller gets the same path, the file equals one clean
+    build (no torn or interleaved writes) and no staging file is left."""
+    import multiprocessing as mp
+    import os
+    import queue
+    import time
+    import uuid
+
+    ctx = mp.get_context("spawn")
+    n = len(os.sched_getaffinity(0)) + 2
+    params = f"test-concurrent-build|{uuid.uuid4().hex}"
+    barrier = ctx.Barrier(n)
+    out = ctx.Queue()
+    procs = [
+        ctx.Process(target=_cached_fixture_worker, args=(params, barrier, out))
+        for _ in range(n)
+    ]
+    for p in procs:
+        p.start()
+    results = []
+    deadline = time.monotonic() + 180
+    try:
+        while len(results) < n and time.monotonic() < deadline:
+            try:
+                results.append(out.get(timeout=1))
+            except queue.Empty:
+                if not any(p.is_alive() for p in procs):
+                    break
+    finally:
+        for p in procs:
+            p.join(timeout=60)
+        for p in procs:
+            if p.is_alive():
+                p.kill()
+    paths = {path for path, _ in results}
+    try:
+        assert not any(p.is_alive() for p in procs)
+        assert [p.exitcode for p in procs] == [0] * n
+        assert len(results) == n and len(paths) == 1, paths
+        clean = b"".join(_fixture_chunk(i) for i in range(_FIXTURE_CHUNKS))
+        assert all(seen == clean for _, seen in results)
+        with open(results[0][0], "rb") as f:
+            assert f.read() == clean
+        d, name = os.path.split(results[0][0])
+        key = os.path.splitext(name)[0]
+        leftovers = [e for e in os.listdir(d) if key in e and e != name]
+        assert leftovers == [], leftovers
+    finally:
+        for path in paths:
+            os.remove(path)

@@ -5,11 +5,20 @@ sorted by all columns; ints must be ints — 4070.0 != 4070).
 
 Run: python tools/check_oracles.py [sf_dir] [query ...]
      python tools/check_oracles.py --json OUT.json [sf_dir] [query ...]
+     python tools/check_oracles.py --digest
 
 --json writes a CORRECTNESS_r{N}.json-shaped artifact covering the FULL
 registry (or the listed queries): the supplementary full-board record the
 round-4 verdict asked for (driver snapshots covered 50 of the registry;
-this pins the rest each round without a judge re-run)."""
+this pins the rest each round without a judge re-run). Each record also
+carries the Spark-side and DuckDB-side canon hashes, so two trees can be
+compared query by query.
+
+--digest checks the oracle TEXT, not results, and starts no Spark: it prints
+`name  sha256(oracle_sql()[name])` for every oracle (names sorted), then one
+combined sha256 over `name + "\0" + sql + "\0"` for the same sorted keys.
+Run it before and after a refactor of __spark_entry__.py; an unchanged
+combined digest means every oracle string is byte-identical."""
 
 from __future__ import annotations
 
@@ -59,6 +68,15 @@ def canon(pdf: pd.DataFrame) -> tuple[list[str], str]:
 
 def main() -> None:
     args = sys.argv[1:]
+    if args == ["--digest"]:
+        oracles = E.oracle_sql()
+        combined = hashlib.sha256()
+        for name in sorted(oracles):
+            sql = oracles[name]
+            print(f"{name}  {hashlib.sha256(sql.encode()).hexdigest()}")
+            combined.update(f"{name}\0{sql}\0".encode())
+        print(f"combined({len(oracles)})  {combined.hexdigest()}")
+        return
     json_out = None
     if args and args[0] == "--json":
         json_out = args[1]
@@ -119,6 +137,7 @@ def main() -> None:
             "rows_match": ok_rows, "schema_match": ok_cols,
             "hash_match": ok_hash, "spark_rows": len(sdf),
             "oracle_rows": len(odf), "err": None,
+            "spark_hash": shash, "oracle_hash": ohash,
         }
         print(
             f"{name}: {status} rows={len(sdf)}/{len(odf)} "
