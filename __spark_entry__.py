@@ -12,17 +12,15 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from functools import partial
-from typing import Any, NamedTuple
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from giga_spatial_spark import cells, cells_hex, cells_s2, synth
-from giga_spatial_spark.functions import albers, laea, lcc, mollweide
 from giga_spatial_spark.functions import text as T
-from giga_spatial_spark.functions.crs import projection_from_params
-from giga_spatial_spark.functions.polar import EPSG_3413
+from giga_spatial_spark.functions.crs import projection
 from giga_spatial_spark.geometry import polygon_centroid
 from giga_spatial_spark.operators import zonal
 from giga_spatial_spark.operators.ann import (
@@ -1961,8 +1959,7 @@ def q_geotiff_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
 class _ProjectedGeoTiff(NamedTuple):
     """One row of the projected-CRS GeoTIFF family (see q_geotiff_projected)."""
 
-    crs: str | dict  # GeoKey CRS written into the fixture
-    proj: Any  # forward() / inverse_sql() of that CRS
+    crs: str | dict  # GeoKey CRS written into the fixture; projection(crs) replays it
     # grid center: an int is that zone's centroid; a tuple is the joint
     # projected bbox of those zones (so the grid overlaps several zones)
     center: int | tuple[int, ...]
@@ -1983,28 +1980,27 @@ CUSTOM_CRS_PARAMS = {
 PROJECTED_GEOTIFFS = {
     # ESRI:54009 Mollweide, GHSL tiles (ref handlers/ghsl.py:78-152); closed-form spherical inverse
     "q_geotiff_mollweide": _ProjectedGeoTiff(
-        "ESRI:54009", mollweide, 2, 180, 140, 15000.0, (31, 17, 1, 997), (7, 13, 23), ""
+        "ESRI:54009", 2, 180, 140, 15000.0, (31, 17, 1, 997), (7, 13, 23), ""
     ),
     # EPSG:3035 ETRS89 LAEA Europe, CORINE/EU-DEM grid; Snyder oblique aspect + authalic series
     "q_geotiff_laea": _ProjectedGeoTiff(
-        "EPSG:3035", laea, 3, 160, 120, 18000.0, (29, 19, 3, 991), (5, 11, 19), "l"
+        "EPSG:3035", 3, 160, 120, 18000.0, (29, 19, 3, 991), (5, 11, 19), "l"
     ),
     # EPSG:5070 NAD83 Conus Albers, NLCD/LANDFIRE grid; Snyder 14-12..14-21 + authalic series
     "q_geotiff_albers": _ProjectedGeoTiff(
-        "EPSG:5070", albers, (2, 8, 9), 160, 120, 52000.0, (23, 31, 7, 977), (7, 13, 23), "a"
+        "EPSG:5070", (2, 8, 9), 160, 120, 52000.0, (23, 31, 7, 977), (7, 13, 23), "a"
     ),
     # EPSG:2154 RGF93 / Lambert-93, French national grid (LCC family); Snyder 15-1..15-11
     "q_geotiff_lcc": _ProjectedGeoTiff(
-        "EPSG:2154", lcc, (3, 5, 7), 160, 120, 89000.0, (37, 17, 11, 953), (3, 17, 29), "c"
+        "EPSG:2154", (3, 5, 7), 160, 120, 89000.0, (37, 17, 11, 953), (3, 17, 29), "c"
     ),
     # EPSG:3413 NSIDC polar stereographic north, sea-ice/ArcticDEM; the grid holds the pole (ρ→0)
     "q_geotiff_polar": _ProjectedGeoTiff(
-        "EPSG:3413", EPSG_3413, (0, 4, 5), 160, 120, 100000.0, (47, 19, 17, 929), (17, 5, 41), "p"
+        "EPSG:3413", (0, 4, 5), 160, 120, 100000.0, (47, 19, 17, 929), (17, 5, 41), "p"
     ),
     # user-defined Albers: GeoKey 32767 + GeoDoubleParams, no EPSG code (ref tif_processor.py)
     "q_geotiff_custom_crs": _ProjectedGeoTiff(
-        CUSTOM_CRS_PARAMS, projection_from_params(CUSTOM_CRS_PARAMS), (2, 8, 9),
-        160, 120, 52000.0, (43, 29, 13, 941), (13, 7, 37), "u",
+        CUSTOM_CRS_PARAMS, (2, 8, 9), 160, 120, 52000.0, (43, 29, 13, 941), (13, 7, 37), "u",
     ),
 }
 
@@ -2014,15 +2010,16 @@ def _projected_anchor(spec: _ProjectedGeoTiff) -> tuple[float, float]:
     ``spec.center`` with the from-scratch forward projection."""
     import numpy as np
 
+    pj = projection(spec.crs)
     if isinstance(spec.center, int):
         cx, cy = polygon_centroid(ADMIN_POLYS[spec.center])
-        x, y = spec.proj.forward(np.array([cx]), np.array([cy]))
+        x, y = pj.forward(np.array([cx]), np.array([cy]))
         x_mid, y_mid = float(x[0]), float(y[0])
     else:
         xs, ys = [], []
         for zid in spec.center:
             arr = np.asarray(ADMIN_POLYS[zid], dtype=np.float64)
-            x, y = spec.proj.forward(arr[:, 0], arr[:, 1])
+            x, y = pj.forward(arr[:, 0], arr[:, 1])
             xs.append(x)
             ys.append(y)
         x = np.concatenate(xs)
@@ -2158,7 +2155,7 @@ def _geotiff_projected_sql(spec: _ProjectedGeoTiff) -> str:
     w, dx, t = spec.w, spec.dx, spec.cte
     a, b, c, m = spec.val
     p, q, r = spec.nodata
-    lon_sql, lat_sql = spec.proj.inverse_sql(
+    lon_sql, lat_sql = projection(spec.crs).inverse_sql(
         f"({x0!r} + ((i % {w}) + 0.5) * {dx!r})",
         f"({y1!r} - ((i // {w}) + 0.5) * {dx!r})",
     )
@@ -2887,21 +2884,14 @@ def _pip_from_feature_table(
     spark: SparkSession, sf_dir: str, feature_df: DataFrame
 ) -> DataFrame:
     """Normalized feature table → polys dict → native PIP join (the shared
-    tail of every file-sourced PIP query). Rings are normalized to CCW —
-    shapefiles wind outer rings CW per spec, and the convex edge-sign refine
-    expects CCW; reversal permutes the identical doubles, so membership
-    stays bit-exact vs ADMIN_POLYS."""
+    tail of every file-sourced PIP query). Shapefiles wind outer rings CW
+    per spec; the cover and the convex edge-sign refine normalize every
+    ring to CCW at entry (geometry.ensure_ccw), and reversal permutes the
+    identical doubles, so membership stays bit-exact vs ADMIN_POLYS."""
     import numpy as np
 
-    def ccw(ring: "np.ndarray") -> "np.ndarray":
-        x, y = ring[:, 0], ring[:, 1]
-        area2 = np.sum(x * np.roll(y, -1) - np.roll(x, -1) * y)
-        return ring[::-1] if area2 < 0 else ring
-
     polys = {
-        int(r["properties"]["zone_id"]): ccw(
-            np.asarray(r["rings"][0], dtype=np.float64)
-        )
+        int(r["properties"]["zone_id"]): np.asarray(r["rings"][0], dtype=np.float64)
         for r in feature_df.select("rings", "properties").collect()
     }
     pts = _docs_pts(spark, sf_dir).select("doc_id", "lon", "lat")

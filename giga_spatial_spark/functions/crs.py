@@ -9,19 +9,27 @@ actually touch:
   EPSG:4326   geographic lon/lat (the engine's canonical frame)
   EPSG:3857   spherical web mercator (tile pyramids)
   ESRI:54009  Mollweide (GHSL grids) — functions/mollweide.py
+  EPSG:3035   LAEA Europe (CORINE / EU grids) — functions/laea.py
+  EPSG:5070   Conus Albers (NLCD / LANDFIRE grids) — functions/albers.py
+  EPSG:2154   Lambert-93 (French national grids) — functions/lcc.py
+  EPSG:3413 / 3031     NSIDC polar stereographic — functions/polar.py
   EPSG:326xx / 327xx   UTM north/south zones — functions/utm.py (Krüger)
+  register_crs() names and user-defined GeoKey parameter dicts
 
-All transforms route through 4326 (exact composition of exact legs).
+`projection(crs)` is the one place a CRS name (or parameter dict) becomes
+a projection object with vectorized forward/inverse; the GeoTIFF reader,
+the vector transforms and the query layer all resolve through it. All
+transforms route through 4326 (exact composition of exact legs).
 `transform_points` is the numpy kernel; `reproject_rings` lifts it over a
 normalized feature table's `rings` column inside one Arrow pass.
 """
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
+
+from . import albers, laea, lcc, mollweide, polar, utm
 
 _R_WEB = 6378137.0
 
@@ -34,7 +42,8 @@ _CUSTOM: dict[str, object] = {}
 
 def register_crs(name: str, projection) -> None:
     """Register a parameterized projection instance under a name usable
-    anywhere a CRS string is accepted (transform_points, reproject_rings).
+    anywhere a CRS string is accepted (projection(), so transform_points,
+    reproject_rings and the GeoTIFF reader).
     ``projection`` needs vectorized forward(lon, lat)->(x, y) and
     inverse(x, y)->(lon, lat) in degrees/meters."""
     key = name.upper().replace(" ", "")
@@ -55,8 +64,9 @@ _CT_POLAR_STEREO = 15
 def projection_from_params(p: dict):
     """Build a projection instance from user-defined GeoTIFF GeoKey
     parameters: {"ct": coord-trans code, "sp1", "sp2", "lat0", "lon0",
-    "x0", "y0"[, "a", "e2"]}. Supports the conic/azimuthal families the
-    engine implements from scratch (LCC 2SP=8, LAEA=10, Albers=11)."""
+    "x0", "y0"[, "k0", "a", "e2" | "inv_f"]}. Supports the families the
+    engine implements from scratch: Transverse Mercator (1), LCC 2SP (8),
+    LAEA (10), Albers (11) and polar stereographic (15)."""
     ct = int(p["ct"])
 
     def need(*names):
@@ -77,51 +87,41 @@ def projection_from_params(p: dict):
         f = 1.0 / float(p["inv_f"])
         kw["e2"] = f * (2.0 - f)
     if ct == _CT_TM:
-        from .utm import TransverseMercator
-
         need("lat0", "lon0")
         tm_kw = {}
         if "a" in p:
             tm_kw["a"] = float(p["a"])
         if "inv_f" in p:
             tm_kw["inv_f"] = float(p["inv_f"])
-        return TransverseMercator(
+        return utm.TransverseMercator(
             p["lat0"], p["lon0"], p.get("k0", 1.0),
             p.get("x0", 0.0), p.get("y0", 0.0), **tm_kw,
         )
     if ct == _CT_LCC_2SP:
-        from .lcc import LambertConformal
-
         need("sp1", "sp2", "lat0", "lon0")
-        return LambertConformal(
+        return lcc.LambertConformal(
             p["sp1"], p["sp2"], p["lat0"], p["lon0"],
             p.get("x0", 0.0), p.get("y0", 0.0), **kw,
         )
     if ct == _CT_ALBERS:
-        from .albers import AlbersConic
-
         need("sp1", "sp2", "lat0", "lon0")
-        return AlbersConic(
+        return albers.AlbersConic(
             p["sp1"], p["sp2"], p["lat0"], p["lon0"],
             p.get("x0", 0.0), p.get("y0", 0.0), **kw,
         )
     if ct == _CT_LAEA:
-        from .laea import LaeaAzimuthal
-
         need("lat0", "lon0")
-        return LaeaAzimuthal(
+        return laea.LaeaAzimuthal(
             p["lat0"], p["lon0"], p.get("x0", 0.0), p.get("y0", 0.0), **kw,
         )
     if ct == _CT_POLAR_STEREO:
-        from .polar import PolarStereographic
-
         # lat_ts arrives in sp1 (ProjStdParallel1GeoKey) per GeoTIFF
         # convention; fall back to lat0 for writers that use NatOriginLat
         lat_ts = p.get("sp1")
         if lat_ts is None:
             need("lat0")
             lat_ts = p["lat0"]
-        return PolarStereographic(
+        return polar.PolarStereographic(
             lat_ts, p["lon0"], p.get("x0", 0.0), p.get("y0", 0.0), **kw,
         )
     raise ValueError(
@@ -132,128 +132,100 @@ def projection_from_params(p: dict):
     )
 
 
-def _parse(crs: str) -> tuple[str, int]:
+class _Geographic:
+    """EPSG:4326: lon/lat degrees are already the engine's frame."""
+
+    @staticmethod
+    def forward(lon, lat):
+        return lon, lat
+
+    inverse = forward
+
+
+class _WebMercator:
+    """EPSG:3857: spherical web mercator (tile pyramids), closed form."""
+
+    @staticmethod
+    def forward(lon, lat):
+        x = np.radians(lon) * _R_WEB
+        lat_c = np.clip(lat, -85.05112878, 85.05112878)
+        return x, _R_WEB * np.arcsinh(np.tan(np.radians(lat_c)))
+
+    @staticmethod
+    def inverse(x, y):
+        return np.degrees(x / _R_WEB), np.degrees(np.arctan(np.sinh(y / _R_WEB)))
+
+
+class _Utm:
+    """EPSG:326zz (north) / 327zz (south): UTM zone zz (functions/utm.py)."""
+
+    def __init__(self, zone: int, south: bool):
+        self.zone, self.south = zone, south
+
+    def forward(self, lon, lat):
+        e, n = utm.utm_forward(lon, lat, self.zone)
+        if not self.south:
+            # keep the standard false-northing convention: southern points
+            # in a northern-zone frame go negative (consistent planar frame)
+            n = np.where(np.asarray(lat) < 0, n - 10_000_000.0, n)
+        return e, n
+
+    def inverse(self, x, y):
+        return utm.utm_inverse(x, y, self.zone, south=self.south)
+
+
+# the one name → projection table; bare codes are accepted for the
+# named systems, UTM zones resolve by pattern in projection()
+_NAMED: dict[str, object] = {
+    name: pj
+    for names, pj in (
+        (("EPSG:4326", "WGS84", "4326"), _Geographic()),
+        (("EPSG:3857", "EPSG:900913", "3857"), _WebMercator()),
+        (("ESRI:54009", "54009"), mollweide),
+        (("EPSG:3035", "3035"), laea),
+        (("EPSG:5070", "5070"), albers),
+        (("EPSG:2154", "2154"), lcc),
+        (("EPSG:3413", "3413"), polar.EPSG_3413),
+        (("EPSG:3031", "3031"), polar.EPSG_3031),
+    )
+    for name in names
+}
+
+
+def projection(crs: str | dict):
+    """The projection object a CRS means: a name (register_crs names
+    first, then the named EPSG/ESRI codes and UTM zones) or a
+    user-defined GeoKey parameter dict (projection_from_params). The
+    object has vectorized forward(lon, lat) -> (x, y) and inverse(x, y)
+    -> (lon, lat) in degrees/meters."""
+    if isinstance(crs, dict):
+        return projection_from_params(crs)
     c = crs.upper().replace(" ", "")
     if c in _CUSTOM:
-        return ("custom:" + c, 0)
-    if c in ("EPSG:4326", "WGS84", "4326"):
-        return ("geographic", 0)
-    if c in ("EPSG:3857", "EPSG:900913", "3857"):
-        return ("webmercator", 0)
-    if c in ("ESRI:54009", "54009"):
-        return ("mollweide", 0)
-    if c in ("EPSG:3035", "3035"):
-        return ("laea_europe", 0)
-    if c in ("EPSG:5070", "5070"):
-        return ("albers_conus", 0)
-    if c in ("EPSG:2154", "2154"):
-        return ("lcc_france", 0)
-    if c in ("EPSG:3413", "3413"):
-        return ("polar_north", 0)
-    if c in ("EPSG:3031", "3031"):
-        return ("polar_south", 0)
-    if c.startswith("EPSG:326") and len(c) == 10:
-        return ("utm_north", int(c[8:]))
-    if c.startswith("EPSG:327") and len(c) == 10:
-        return ("utm_south", int(c[8:]))
+        return _CUSTOM[c]
+    if c in _NAMED:
+        return _NAMED[c]
+    zone = c[8:]
+    if c[:8] in ("EPSG:326", "EPSG:327") and len(zone) == 2 and zone.isdigit():
+        if 1 <= int(zone) <= 60:
+            return _Utm(int(zone), south=c[7] == "7")
     raise ValueError(
         f"unsupported crs {crs!r} — supported: EPSG:4326, EPSG:3857, "
         "ESRI:54009, EPSG:3035 (LAEA Europe), EPSG:5070 (Conus Albers), "
         "EPSG:2154 (Lambert-93), EPSG:3413/3031 (polar stereographic), "
-        "EPSG:326xx/327xx (UTM), and register_crs() custom projections"
+        "EPSG:32601-32660/32701-32760 (UTM), and register_crs() custom "
+        "projections"
     )
-
-
-def _to_geographic(xs: np.ndarray, ys: np.ndarray, kind: str, zone: int):
-    if kind == "geographic":
-        return xs, ys
-    if kind.startswith("custom:"):
-        return _CUSTOM[kind[7:]].inverse(xs, ys)
-    if kind == "webmercator":
-        lon = np.degrees(xs / _R_WEB)
-        lat = np.degrees(np.arctan(np.sinh(ys / _R_WEB)))
-        return lon, lat
-    if kind == "mollweide":
-        from . import mollweide
-
-        return mollweide.inverse(xs, ys)
-    if kind == "laea_europe":
-        from . import laea
-
-        return laea.inverse(xs, ys)
-    if kind == "albers_conus":
-        from . import albers
-
-        return albers.inverse(xs, ys)
-    if kind == "lcc_france":
-        from . import lcc
-
-        return lcc.inverse(xs, ys)
-    if kind in ("polar_north", "polar_south"):
-        from . import polar
-
-        pj = polar.EPSG_3413 if kind == "polar_north" else polar.EPSG_3031
-        return pj.inverse(xs, ys)
-    from . import utm
-
-    south = kind == "utm_south"
-    lon, lat = utm.utm_inverse(
-        xs, ys, zone, south=np.full(len(np.atleast_1d(xs)), south)
-    )
-    return lon, lat
-
-
-def _from_geographic(lon: np.ndarray, lat: np.ndarray, kind: str, zone: int):
-    if kind == "geographic":
-        return lon, lat
-    if kind.startswith("custom:"):
-        return _CUSTOM[kind[7:]].forward(lon, lat)
-    if kind == "webmercator":
-        x = np.radians(lon) * _R_WEB
-        lat_c = np.clip(lat, -85.05112878, 85.05112878)
-        y = _R_WEB * np.arcsinh(np.tan(np.radians(lat_c)))
-        return x, y
-    if kind == "mollweide":
-        from . import mollweide
-
-        return mollweide.forward(lon, lat)
-    if kind == "laea_europe":
-        from . import laea
-
-        return laea.forward(lon, lat)
-    if kind == "albers_conus":
-        from . import albers
-
-        return albers.forward(lon, lat)
-    if kind == "lcc_france":
-        from . import lcc
-
-        return lcc.forward(lon, lat)
-    if kind in ("polar_north", "polar_south"):
-        from . import polar
-
-        pj = polar.EPSG_3413 if kind == "polar_north" else polar.EPSG_3031
-        return pj.forward(lon, lat)
-    from . import utm
-
-    e, n = utm.utm_forward(lon, lat, zone)
-    if kind == "utm_north":
-        # keep the standard false-northing convention: southern points in
-        # a northern-zone frame go negative (consistent planar frame)
-        n = np.where(lat < 0, n - 10_000_000.0, n)
-    return e, n
 
 
 def transform_points(
-    xs, ys, from_crs: str = "EPSG:4326", to_crs: str = "EPSG:4326"
+    xs, ys, from_crs: str | dict = "EPSG:4326", to_crs: str | dict = "EPSG:4326"
 ):
-    """Vectorized CRS transform; routes through geographic lon/lat."""
+    """Vectorized CRS transform; routes through geographic lon/lat. Either
+    CRS is anything projection() resolves."""
     xs = np.asarray(xs, dtype=np.float64)
     ys = np.asarray(ys, dtype=np.float64)
-    fk, fz = _parse(from_crs)
-    tk, tz = _parse(to_crs)
-    lon, lat = _to_geographic(xs, ys, fk, fz)
-    return _from_geographic(lon, lat, tk, tz)
+    return projection(to_crs).forward(*projection(from_crs).inverse(xs, ys))
 
 
 def reproject_rings(
@@ -276,20 +248,7 @@ def reproject_rings(
     # resolve now, on the driver: custom-registered projections live in
     # the driver's _CUSTOM registry, which does NOT exist on executors —
     # the resolved (picklable) projection objects ship in the closure
-    fk, fz = _parse(from_crs)
-    tk, tz = _parse(to_crs)
-    fobj = _CUSTOM[fk[7:]] if fk.startswith("custom:") else None
-    tobj = _CUSTOM[tk[7:]] if tk.startswith("custom:") else None
-
-    def _tx(xs, ys):
-        lon, lat = (
-            fobj.inverse(xs, ys) if fobj is not None
-            else _to_geographic(xs, ys, fk, fz)
-        )
-        return (
-            tobj.forward(lon, lat) if tobj is not None
-            else _from_geographic(lon, lat, tk, tz)
-        )
+    src, dst = projection(from_crs), projection(to_crs)
 
     @F.pandas_udf(StringType())
     def kernel(col: pd.Series) -> pd.Series:
@@ -301,7 +260,7 @@ def reproject_rings(
             for ring in rings:
                 arr = np.asarray(ring, dtype=np.float64)
                 if len(arr):
-                    x, y = _tx(arr[:, 0], arr[:, 1])
+                    x, y = dst.forward(*src.inverse(arr[:, 0], arr[:, 1]))
                     nr.append(np.column_stack([x, y]).tolist())
                 else:
                     nr.append([])

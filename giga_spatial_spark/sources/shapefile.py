@@ -61,9 +61,10 @@ def _sidecar(path: str, ext: str) -> str | None:
 def read_shp_meta(path: str) -> ShpMeta:
     """Parse the .shp header, the full .shx index, and the .dbf/.prj/.cpg
     sidecar headers (driver-side; all are small)."""
+    size = os.path.getsize(path)
     with open(path, "rb") as f:
         hdr = f.read(100)
-    if struct.unpack(">i", hdr[:4])[0] != 9994:
+    if len(hdr) < 100 or struct.unpack(">i", hdr[:4])[0] != 9994:
         raise ValueError(f"not a shapefile: {path}")
     shape_type = struct.unpack("<i", hdr[32:36])[0]
     bbox = struct.unpack("<4d", hdr[36:68])
@@ -71,22 +72,40 @@ def read_shp_meta(path: str) -> ShpMeta:
     shx = _sidecar(path, ".shx")
     if shx is not None:
         with open(shx, "rb") as f:
-            f.seek(24)
-            (len_words,) = struct.unpack(">i", f.read(4))
-            f.seek(100)
-            idx = np.frombuffer(f.read(len_words * 2 - 100), dtype=">i4")
+            shx_hdr = f.read(100)
+            if len(shx_hdr) < 100:
+                raise ValueError(f"corrupt .shx {shx}: header under 100 bytes")
+            n_idx = struct.unpack(">i", shx_hdr[24:28])[0] * 2 - 100
+            if n_idx < 0 or n_idx % 8 or 100 + n_idx > os.path.getsize(shx):
+                raise ValueError(
+                    f"corrupt .shx {shx}: header length {n_idx + 100} bytes "
+                    "does not frame 8-byte index entries within the file"
+                )
+            idx = np.frombuffer(f.read(n_idx), dtype=">i4")
         offsets = idx[0::2].astype(np.int64) * 2
         lengths = idx[1::2].astype(np.int64) * 2
+        bad = (offsets < 100) | (lengths < 0) | (offsets + 8 + lengths > size)
+        if bad.any():
+            i = int(np.argmax(bad))
+            raise ValueError(
+                f"corrupt .shx {shx}: record {i} (offset {offsets[i]}, "
+                f"length {lengths[i]}) lies outside the {size}-byte .shp"
+            )
     else:
         # no .shx: single sequential scan of record headers (driver-side,
         # header-only seeks — still cheap relative to content decode)
         offs, lens = [], []
-        size = os.path.getsize(path)
         pos = 100
         with open(path, "rb") as f:
             while pos + 8 <= size:
                 f.seek(pos)
                 _, clen = struct.unpack(">ii", f.read(8))
+                if clen < 0 or pos + 8 + clen * 2 > size:
+                    raise ValueError(
+                        f"corrupt .shp {path}: record {len(offs)} at byte "
+                        f"{pos} has content length {clen * 2}, outside the "
+                        f"{size}-byte file"
+                    )
                 offs.append(pos)
                 lens.append(clen * 2)
                 pos += 8 + clen * 2
@@ -107,6 +126,8 @@ def read_shp_meta(path: str) -> ShpMeta:
     if dbf is not None:
         with open(dbf, "rb") as f:
             head = f.read(32)
+            if len(head) < 32:
+                raise ValueError(f"corrupt .dbf {dbf}: header under 32 bytes")
             n_rec = struct.unpack("<I", head[4:8])[0]
             hsize, rsize = struct.unpack("<HH", head[8:12])
             fields = []
@@ -120,6 +141,11 @@ def read_shp_meta(path: str) -> ShpMeta:
         if n_rec and n_rec != meta.n_records:
             raise ValueError(
                 f".dbf has {n_rec} records but .shp has {meta.n_records}"
+            )
+        if hsize + meta.n_records * rsize > os.path.getsize(dbf):
+            raise ValueError(
+                f"corrupt .dbf {dbf}: {meta.n_records} records of {rsize} "
+                f"bytes after a {hsize}-byte header exceed the file"
             )
         meta.dbf_path = os.path.abspath(dbf)
         meta.dbf_header_size = hsize
@@ -149,23 +175,49 @@ def _ring_is_cw(ring: np.ndarray) -> bool:
     )
 
 
+def _need(content: bytes, n_bytes: int, what: str) -> None:
+    if n_bytes > len(content):
+        raise ValueError(
+            f"truncated shapefile record: {what} needs {n_bytes} bytes, "
+            f"the record holds {len(content)}"
+        )
+
+
 def decode_record(content: bytes) -> tuple[str | None, list | None]:
     """One .shp record's content bytes → (geom_type, rings) in the engine's
-    flattened open-ring convention."""
+    flattened open-ring convention. Counts read from the record are checked
+    against its length (ValueError, never struct.error)."""
+    _need(content, 4, "the shape type")
     (stype,) = struct.unpack_from("<i", content, 0)
     base = stype % 10 if stype in (11, 13, 15, 18, 21, 23, 25, 28) else stype
     if base == _NULL:
         return None, None
     if base == _POINT:
+        _need(content, 20, "a point")
         x, y = struct.unpack_from("<2d", content, 4)
         return "Point", [[[x, y]]]
     if base == _MULTIPOINT:
+        _need(content, 40, "a multipoint header")
         (n,) = struct.unpack_from("<i", content, 36)
+        if n < 0:
+            raise ValueError(f"corrupt shapefile record: {n} points")
+        _need(content, 40 + 16 * n, f"{n} points")
         pts = np.frombuffer(content, dtype="<f8", count=2 * n, offset=40)
         return "MultiPoint", [pts.reshape(n, 2).tolist()]
     if base in (_POLYLINE, _POLYGON):
+        _need(content, 44, "a polyline/polygon header")
         n_parts, n_points = struct.unpack_from("<2i", content, 36)
+        if n_parts < 0 or n_points < 0:
+            raise ValueError(
+                f"corrupt shapefile record: {n_parts} parts, {n_points} points"
+            )
+        _need(content, 44 + 4 * n_parts + 16 * n_points,
+              f"{n_parts} parts and {n_points} points")
         parts = np.frombuffer(content, dtype="<i4", count=n_parts, offset=44)
+        if n_parts and (
+            parts[0] != 0 or (np.diff(parts) < 0).any() or parts[-1] > n_points
+        ):
+            raise ValueError("corrupt shapefile record: part indices out of order")
         pts = np.frombuffer(
             content, dtype="<f8", count=2 * n_points, offset=44 + 4 * n_parts
         ).reshape(n_points, 2)

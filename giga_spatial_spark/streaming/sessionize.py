@@ -9,8 +9,6 @@ stateful path is verifiable against a deterministic oracle.
 
 from __future__ import annotations
 
-import datetime as dt
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,49 +40,57 @@ STATE_SCHEMA = StructType(
 
 
 def sessionize_stream(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Streaming sessionization with processing-time timeout: a session
-    closes (and is emitted) when no event arrives for `gap_minutes`."""
+    """Streaming sessionization in event time, with the batch twin's rule:
+    a user's next event more than `gap_minutes` after the session's last
+    one starts a new session. Closed sessions are emitted as soon as a
+    later event closes them; the open one is emitted when the watermark
+    (latest event time minus `gap_minutes`) passes its end plus the gap.
+    Event time lets a replay of finite input end: a processing-time
+    timeout keeps requesting no-data batches until the gap has passed on
+    the wall clock, so an availableNow query would not terminate."""
     gap_us = gap_minutes * 60 * 1_000_000
 
-    def update(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            (start_us, end_us, count) = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "session_start": [pd.Timestamp(start_us, unit="us")],
-                    "session_end": [pd.Timestamp(end_us, unit="us")],
-                    "event_count": [count],
-                }
-            )
-            return
-        rows = pd.concat(list(pdfs))
-        ts_us = rows["ts"].astype("int64") // 1000
-        lo, hi, n = int(ts_us.min()), int(ts_us.max()), len(rows)
-        if state.exists:
-            (start_us, end_us, count) = state.get
-            lo, hi, n = min(lo, start_us), max(hi, end_us), n + count
-        state.update((lo, hi, n))
-        state.setTimeoutDuration(gap_minutes * 60 * 1000)
-        yield pd.DataFrame(
+    def frame(uid, sessions) -> pd.DataFrame:
+        return pd.DataFrame(
             {
-                "user_id": pd.Series([], dtype="int64"),
-                "session_start": pd.Series([], dtype="datetime64[ns]"),
-                "session_end": pd.Series([], dtype="datetime64[ns]"),
-                "event_count": pd.Series([], dtype="int64"),
+                "user_id": pd.Series([uid] * len(sessions), dtype="int64"),
+                "session_start": pd.to_datetime([s[0] for s in sessions], unit="us"),
+                "session_end": pd.to_datetime([s[1] for s in sessions], unit="us"),
+                "event_count": pd.Series([s[2] for s in sessions], dtype="int64"),
             }
         )
 
+    def update(key, pdfs, state: GroupState):
+        if state.hasTimedOut:
+            session = state.get
+            state.remove()
+            yield frame(key[0], [session])
+            return
+        ts_us = pd.concat([p["ts"] for p in pdfs]).astype("int64") // 1000
+        closed = []
+        cur = list(state.get) if state.exists else None
+        for t in sorted(ts_us.tolist()):
+            if cur is not None and t - cur[1] <= gap_us:
+                cur = [min(cur[0], t), max(cur[1], t), cur[2] + 1]
+            else:
+                if cur is not None:
+                    closed.append(cur)
+                cur = [t, t, 1]
+        state.update(tuple(cur))
+        state.setTimeoutTimestamp((cur[1] + gap_us) // 1000)
+        if closed:
+            yield frame(key[0], closed)
+
     return (
         events.withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", f"{gap_minutes} minutes")
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
             outputStructType=SESSION_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 

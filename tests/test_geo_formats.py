@@ -123,6 +123,99 @@ def test_shp_handpacked_z_and_null_records():
     assert gt == "MultiLineString" and len(rings) == 2 and rings[1][0] == [5.0, 5.0]
 
 
+def _fuzz_shapefile(src_shp: str, workdir: str, seed: int, rounds: int) -> None:
+    """Corrupt 1-4 random bytes of the .shp (and, on odd rounds, of the
+    .shx) past the file header, then parse the index and decode every
+    record the way the executors do. Only ValueError may escape. Even
+    rounds drop the .shx, so the reader scans the record headers."""
+    import shutil
+
+    rng = np.random.RandomState(seed)
+    base = {ext: open(src_shp[:-4] + ext, "rb").read() for ext in (".shp", ".shx")}
+    dst = os.path.join(workdir, "fuzz.shp")
+    for k in range(rounds):
+        shutil.rmtree(workdir)
+        os.makedirs(workdir)
+        exts = (".shp", ".shx") if k % 2 else (".shp",)
+        for ext in exts:
+            b = bytearray(base[ext])
+            if ext == ".shp" or rng.randint(2):
+                for _ in range(rng.randint(1, 5)):
+                    b[rng.randint(100, len(b))] = rng.randint(256)
+            open(dst[:-4] + ext, "wb").write(bytes(b))
+        try:
+            m = read_shp_meta(dst)
+            data = open(dst, "rb").read()
+            for off, n in zip(m.offsets.tolist(), m.lengths.tolist()):
+                decode_record(data[off + 8: off + 8 + n])
+        except ValueError:
+            pass
+
+
+def _run_child(code: str, timeout: float = 30.0):
+    """Run ``code`` in a fresh interpreter on this tree; a hang fails the
+    test at the timeout instead of blocking the suite."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    return subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True,
+        text=True, timeout=timeout,
+    )
+
+
+def test_shp_corrupt_sizes_raise_valueerror(admin_shp, tmp_path):
+    """Sizes read from .shp record headers and the .shx index are checked
+    against the real file and record lengths: corruption ends in a clear
+    ValueError, never a hang, struct.error or a short executor read."""
+    import shutil
+
+    # no .shx and a record content length of -4: the header scan must
+    # stop with ValueError (a scan that never advances would hang)
+    noidx = str(tmp_path / "neg.shp")
+    b = bytearray(open(admin_shp, "rb").read())
+    b[104:108] = struct.pack(">i", -4)
+    open(noidx, "wb").write(bytes(b))
+    out = _run_child(
+        "from giga_spatial_spark.sources.shapefile import read_shp_meta\n"
+        "try:\n"
+        f"    read_shp_meta({noidx!r})\n"
+        "except ValueError as e:\n"
+        "    print('ValueError:', e)\n"
+    )
+    assert out.returncode == 0 and "ValueError: corrupt .shp" in out.stdout, out
+
+    # a .shx entry pointing past the end of the .shp
+    far = str(tmp_path / "far.shp")
+    shutil.copy(admin_shp, far)
+    shx = bytearray(open(admin_shp[:-4] + ".shx", "rb").read())
+    shx[104:108] = struct.pack(">i", 10**6)
+    open(far[:-4] + ".shx", "wb").write(bytes(shx))
+    with pytest.raises(ValueError, match="outside"):
+        read_shp_meta(far)
+
+    # truncated record content (polygon header, point, part/point arrays)
+    poly = struct.pack("<i4d2i", 5, 0, 0, 1, 1, 1, 3) + struct.pack("<i", 0)
+    for cut in (2, 20, len(poly), len(poly) + 40):
+        content = (poly + np.zeros(6, "<f8").tobytes())[:cut]
+        with pytest.raises(ValueError, match="truncated"):
+            decode_record(content)
+    with pytest.raises(ValueError, match="truncated"):
+        decode_record(struct.pack("<id", 1, 0.5))
+
+    # seeded byte corruption, with and without .shx, in a child process
+    work = str(tmp_path / "fuzz")
+    os.makedirs(work)
+    out = _run_child(
+        "from tests.test_geo_formats import _fuzz_shapefile\n"
+        f"_fuzz_shapefile({admin_shp!r}, {work!r}, seed=7, rounds=400)\n"
+        "print('done')\n",
+        timeout=60.0,
+    )
+    assert out.returncode == 0 and "done" in out.stdout, out.stderr[-2000:]
+
+
 def test_gpkg_roundtrip(spark, admin_shp, tmp_path):
     base = read_shapefile(spark, admin_shp)
     path = str(tmp_path / "admin.gpkg")

@@ -615,6 +615,47 @@ def test_parameterized_conics_southern_cones():
     assert np.abs(lo - lon).max() < 1e-9 and np.abs(la - lat).max() < 1e-9
 
 
+def test_raster_and_vector_share_one_crs_registry(spark, tmp_path):
+    """Every CRS with a raster meaning decodes through the same projection
+    object as transform_points: a 3x4 GeoTIFF per registry entry (each
+    named code, one UTM zone per hemisphere, one user-defined GeoKey
+    parameter dict) yields pixel-center lon/lat bit-identical to
+    transform_points(x, y, crs, "EPSG:4326")."""
+    from giga_spatial_spark.functions.crs import transform_points
+
+    lcc_params = {"ct": 8, "sp1": 39.9333333333, "sp2": 40.9666666667,
+                  "lat0": 39.3333333333, "lon0": -77.75,
+                  "x0": 600000.0, "y0": 0.0}
+    cases = [  # (crs, anchor lon, lat, pixel size in CRS units)
+        ("EPSG:4326", 12.5, 41.75, 0.01),
+        ("EPSG:3857", 10.0, 45.0, 1000.0),
+        ("ESRI:54009", 20.0, 10.0, 1000.0),
+        ("EPSG:3035", 10.0, 52.0, 1000.0),
+        ("EPSG:5070", -96.0, 40.0, 1000.0),
+        ("EPSG:2154", 3.0, 46.5, 1000.0),
+        ("EPSG:3413", -45.0, 75.0, 1000.0),
+        ("EPSG:3031", 0.0, -75.0, 1000.0),
+        ("EPSG:32632", 9.0, 45.0, 1000.0),
+        ("EPSG:32733", 15.0, -20.0, 1000.0),
+        (lcc_params, -77.0, 40.3, 500.0),
+    ]
+    vals = np.arange(12, dtype=np.float64).reshape(3, 4)
+    for k, (crs, lon, lat, d) in enumerate(cases):
+        x, y = transform_points([lon], [lat], "EPSG:4326", crs)
+        x0, y1 = float(x[0]), float(y[0])
+        path = str(tmp_path / f"crs{k}.tif")
+        write_tiff(path, vals, lon0=x0, lat1=y1, dx=d, dy=d, crs=crs)
+        pdf = tiff_pixel_table(spark, path).toPandas()
+        assert len(pdf) == 12, crs
+        row = 2 - pdf["py"].to_numpy()  # py counts from the south edge
+        want_lon, want_lat = transform_points(
+            x0 + (pdf["px"].to_numpy() + 0.5) * d, y1 - (row + 0.5) * d,
+            crs, "EPSG:4326",
+        )
+        assert pdf["lon"].to_numpy().tobytes() == want_lon.tobytes(), crs
+        assert pdf["lat"].to_numpy().tobytes() == want_lat.tobytes(), crs
+
+
 def test_register_crs_vector_side(spark):
     """crs.register_crs makes a parameterized projection usable by name
     in transform_points and reproject_rings (the arbitrary-CRS pyproj

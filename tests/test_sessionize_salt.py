@@ -32,10 +32,12 @@ def test_sessionize_batch_properties(spark):
 
 
 def test_sessionize_stream_runs_stateful(spark):
-    """The applyInPandasWithState operator starts, consumes a microbatch and
-    maintains state without error (deterministic output equivalence is
-    carried by the batch twin's DuckDB oracle, q_sessionize)."""
+    """The applyInPandasWithState operator consumes the events, the
+    availableNow query terminates on its own, and every session it emits
+    is a session of the batch twin (whose DuckDB oracle is q_sessionize);
+    only a user's last, still-open session may be missing."""
     tmp = tempfile.mkdtemp(prefix="sess_")
+    q = None
     try:
         src = os.path.join(tmp, "src")
         os.makedirs(src)
@@ -51,13 +53,29 @@ def test_sessionize_stream_runs_stateful(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        # with a single microbatch no session times out yet → no rows, but
-        # the stateful operator must have committed its state cleanly
+        assert q.awaitTermination(60) is True
         assert q.lastProgress is not None
-        n = spark.sql("select count(*) from sessions_out").collect()[0][0]
-        assert n >= 0
+
+        def keyed(df):
+            return {
+                tuple(r)
+                for r in df.select(
+                    "user_id", F.unix_micros("session_start"),
+                    F.unix_micros("session_end"), "event_count",
+                ).collect()
+            }
+
+        got = keyed(spark.table("sessions_out"))
+        ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+        want = keyed(
+            sessionize_batch(ev.withColumn("ts", F.col("ts").cast("timestamp")))
+        )
+        assert got and got <= want
+        missing = [s[0] for s in want - got]
+        assert len(missing) == len(set(missing))  # at most one per user
     finally:
+        if q is not None:
+            q.stop()
         shutil.rmtree(tmp, ignore_errors=True)
 
 
